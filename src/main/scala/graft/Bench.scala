@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 /** Benchmark harness. Emits ONE compact headline JSON line (last on
   * stdout — the driver captures a bounded tail) plus diagnostic lines
@@ -19,18 +20,7 @@ import scala.jdk.CollectionConverters._
   * ScaleBench's fresh-JVM figures.
   */
 object Bench {
-  private val FunnelNames = Seq("curate_funnel", "curate_funnel_full")
-
-  private def buildSpark(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  private[graft] val FunnelNames = Seq("curate_funnel", "curate_funnel_full")
 
   // median of >= 3 timed passes per query (min/max alongside) —
   // single-shot numbers at this scale are dominated by JIT warmup,
@@ -201,30 +191,32 @@ object Bench {
   // delta) is adjudicable from the bench output alone
   private var lastSheet: Option[String] = None
 
-  private def runFunnel(spark: SparkSession, sfDir: String,
-                        name: String): (Double, Double, Double) = name match {
-    // end-to-end curation funnel (exact → near → lang → quality with
-    // per-stage datasheet counts); each run builds fresh stage caches
-    // and releases them, so runs don't feed each other
-    case "curate_funnel" => stats(name) {
-      val r = ops.CurateCli.curate(
-        Tables.documents(spark, sfDir), "doc_id", "text")
-      r.unpersist()
-    }
-    // the FULL funnel: all extended stages (NFC normalize → quality
-    // percentile → char entropy → domain mix → pii scrub → repetition
-    // filter → gopher rules → line dedup → span excision →
-    // decontaminate vs the q53 eval slice → exact-quote phrase audit →
-    // token-budget selection → sequence packing) — the
-    // everything-enabled curation cost, pricing the complete 20-stage
-    // funnel (round-12's NFC + phrase-audit stages included since
-    // round 13). The driver corpus is single-line text (line dedup
-    // would be all overhead, no work), so every 7th doc gets the
-    // seeded boilerplate line — the stage's token delta shows up in
-    // the datasheet.
-    case _ => stats(name) {
+  /** One run of a bench curation funnel — the configuration the bench
+    * times and `tools.QueryJobDiag curate_funnel[_full]` profiles. The
+    * caller releases the result ([[ops.CurateCli.Curated.unpersist]]).
+    *
+    * `curate_funnel`: the end-to-end curation funnel (exact → near →
+    * lang → quality with per-stage datasheet counts); each run builds
+    * fresh stage caches, so runs don't feed each other.
+    *
+    * `curate_funnel_full`: all extended stages (NFC normalize → quality
+    * percentile → char entropy → domain mix → pii scrub → repetition
+    * filter → gopher rules → line dedup → span excision →
+    * decontaminate vs the q53 eval slice → exact-quote phrase audit →
+    * token-budget selection → sequence packing) — the
+    * everything-enabled curation cost, pricing the complete 20-stage
+    * funnel (round-12's NFC + phrase-audit stages included since
+    * round 13). The sf corpus is single-line text (line dedup
+    * would be all overhead, no work), so every 7th doc gets the
+    * seeded boilerplate line — the stage's token delta shows up in
+    * the datasheet. */
+  private[graft] def curateFunnel(spark: SparkSession, sfDir: String,
+      name: String): ops.CurateCli.Curated = name match {
+    case "curate_funnel" =>
+      ops.CurateCli.curate(Tables.documents(spark, sfDir), "doc_id", "text")
+    case "curate_funnel_full" =>
       val docs = OrganicCorpus.seedBoilerplate(Tables.documents(spark, sfDir))
-      val r = ops.CurateCli.curate(docs, "doc_id", "text",
+      ops.CurateCli.curate(docs, "doc_id", "text",
         ops.CurateCli.Config(mixDefaultPpm = 900000L,
           minQualityPctPpm = 50000L, minCharEntropyFp = 2600000L,
           containmentThreshold = 0.8, minNovelty = 0.05,
@@ -245,9 +237,15 @@ object Bench {
           budgetTokens = 2000000L,
           packBudget = 512, packBuckets = 8),
         evalDocs = Some(docs.filter(col("doc_id") % 37 === 0)))
+    case other => sys.error(s"unknown funnel '$other' (${FunnelNames.mkString("|")})")
+  }
+
+  private def runFunnel(spark: SparkSession, sfDir: String,
+                        name: String): (Double, Double, Double) = stats(name) {
+    val r = curateFunnel(spark, sfDir, name)
+    if (name == "curate_funnel_full")
       lastSheet = Some(ops.CurateCli.datasheetJson(r.funnel))
-      r.unpersist()
-    }
+    r.unpersist()
   }
 
   private def r3(d: Double): Double = math.rint(d * 1000) / 1000
@@ -267,69 +265,17 @@ object Bench {
       case None => java.nio.file.Files.createTempDirectory(prefix)
     }
 
-  /** Micro-batch duration accumulator for the cdc loop — sums the
-    * per-trigger `durationMs` terms across every active query (main
-    * stream + DLQ), so a slow run names its dominant term from the
-    * artifact alone: `addBatch` is execution+sink work, `walCommit`
-    * (+`commitOffsets`) is checkpoint fsync, and wall minus
-    * `triggerExecution` is time OUTSIDE triggers (scheduling, source
-    * listing, stream startup). Progress events post asynchronously —
-    * [[settle]] polls until the counters go quiet before reading. */
-  private final class BatchTimes
-      extends org.apache.spark.sql.streaming.StreamingQueryListener {
-    @volatile var batches = 0L
-    @volatile var addBatchMs = 0L
-    @volatile var walCommitMs = 0L
-    @volatile var triggerMs = 0L
-    /** Per-batch (batchId, addBatchMs, inputRows) in ARRIVAL order —
-      * lets the artifact distinguish a front-loaded slow run (batches
-      * 1-2 carry the time ⇒ residual JIT/state warm-up) from a
-      * uniformly slow one (⇒ host contention). Main + DLQ queries
-      * interleave; arrival order is the diagnostic order. */
-    val perBatch =
-      scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    override def onQueryStarted(
-        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryTerminated(
-        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    override def onQueryProgress(
-        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-      synchronized {
-        val d = e.progress.durationMs
-        def g(k: String): Long =
-          Option(d.get(k)).map(_.longValue).getOrElse(0L)
-        batches += 1
-        addBatchMs += g("addBatch")
-        walCommitMs += g("walCommit") + g("commitOffsets")
-        triggerMs += g("triggerExecution")
-        perBatch += ((e.progress.batchId, g("addBatch"),
-          e.progress.numInputRows))
-      }
-    /** `[{"id":…,"add_batch_ms":…,"rows":…},…]` for the artifact. */
-    def batchRowsJson: String = synchronized {
-      perBatch.map { case (id, ms, rows) =>
-        s"""{"id":$id,"add_batch_ms":$ms,"rows":$rows}"""
-      }.mkString("[", ",", "]")
-    }
-    /** Immutable (batchId, addBatchMs, rows) snapshot — the input to
-      * [[Bench.contentionAdjustedSec]]. */
-    def batchSnapshot: Seq[(Long, Long, Long)] =
-      synchronized(perBatch.toList)
-    /** Fraction of total addBatch time carried by the first two
-      * arriving batches — >0.5 with ≥3 batches reads as front-loaded.
-      * None when there is no basis for a verdict (fewer than 3 batches,
-      * or zero recorded addBatch time): conflating "no data" with
-      * "0 pct front-loaded" would fabricate a confident host-contention
-      * verdict from an empty breakdown. */
-    def frontLoadFrac: Option[Double] = synchronized {
-      val tot = perBatch.map(_._2).sum
-      if (tot <= 0 || perBatch.size < 3) None
-      else Some(perBatch.take(2).map(_._2).sum.toDouble / tot)
-    }
-    /** Wait (bounded) for the async listener bus to drain: the last
-      * trigger's progress event may land after awaitTermination. Runs
-      * OUTSIDE the timed window. */
-    def settle(): Unit = observe.ListenerDrain.settle(() => batches)
+  /** Fraction of total addBatch time carried by the first two
+    * arriving batches — >0.5 with ≥3 batches reads as front-loaded
+    * (residual JIT/state warm-up) rather than uniformly slow (host
+    * contention). None when there is no basis for a verdict (fewer
+    * than 3 batches, or zero recorded addBatch time): conflating "no
+    * data" with "0 pct front-loaded" would fabricate a confident
+    * host-contention verdict from an empty breakdown. */
+  private def frontLoadFrac(rows: Seq[(Long, Long, Long)]): Option[Double] = {
+    val tot = rows.map(_._2).sum
+    if (tot <= 0 || rows.size < 3) None
+    else Some(rows.take(2).map(_._2).sum.toDouble / tot)
   }
 
   /** Contention-adjusted wall seconds for one CDC run (the round-18
@@ -437,11 +383,6 @@ object Bench {
       StructField("commit_timestamp", LongType)) ++
       Seq("user_id", "event_id", "value", "props").map(f =>
         ev.schema(f).copy(name = f)))
-    def rmTree(p: java.nio.file.Path): Unit = try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-    } catch { case _: Exception => () }
     // UNTIMED warm-up drain: a fresh JVM's first run otherwise pays
     // the one-time JIT + codegen-compile + state/provider class-load
     // bill inside the priced window (round 16: run 1 at 11.9k eps vs
@@ -468,36 +409,41 @@ object Bench {
         // a failed warm-up must not leak its fire-and-forget DLQ query
         // (or a dying merge query) into the timed runs — they would
         // surface through the timed window's awaitTermination, or read
-        // from the dirs rmTree is about to delete
+        // from the dirs about to be deleted
         spark.streams.active.foreach(q =>
           try q.stop() catch { case _: Exception => () })
       }
-      rmTree(warmDir)
+      Try(util.Fs.deleteRecursive(warmDir))
     }
     val runsTele = Vector.fill(cdcRuns) {
       val runDir = newTempDir("graft-cdcrun")
-      val bt = new BatchTimes
+      // micro-batch breakdown per run: a slow run names its dominant
+      // term (addBatch / walCommit / outside triggers) from the
+      // artifact alone
+      val bt = new observe.CdcQueryListener()
       spark.streams.addListener(bt)
       val rj0 = cpuJiffies()
-      val t = timed("cdc_replicate") {
-        val pipeline = new cdc.CdcPipeline(spark, s"$runDir/wh", s"$runDir/ck",
-          keysByTable = tables.map(_ -> Seq("user_id")).toMap,
-          watermarkDelay = "3650 days", warehouseBuckets = 8)
-        val raw = pipeline.readJsonStream(inDir, maxFilesPerTrigger = 2)
-        pipeline.start(raw, envSchema).awaitTermination()
-        // the DLQ stream is fire-and-forget; AvailableNow drains it —
-        // its work belongs inside the priced window
-        spark.streams.active.foreach(_.awaitTermination())
-      }
-      val tele = stealCpu(rj0, cpuJiffies())
-      bt.settle() // async listener bus — drain before reading counters
-      spark.streams.removeListener(bt)
+      val (t, tele) = try {
+        val t = timed("cdc_replicate") {
+          val pipeline = new cdc.CdcPipeline(spark, s"$runDir/wh", s"$runDir/ck",
+            keysByTable = tables.map(_ -> Seq("user_id")).toMap,
+            watermarkDelay = "3650 days", warehouseBuckets = 8)
+          val raw = pipeline.readJsonStream(inDir, maxFilesPerTrigger = 2)
+          pipeline.start(raw, envSchema).awaitTermination()
+          // the DLQ stream is fire-and-forget; AvailableNow drains it —
+          // its work belongs inside the priced window
+          spark.streams.active.foreach(_.awaitTermination())
+        }
+        val tele = stealCpu(rj0, cpuJiffies())
+        bt.settle() // async listener bus — drain before reading counters
+        (t, tele)
+      } finally spark.streams.removeListener(bt)
       // per-run warehouse + checkpoint (hundreds of MB each across
       // repeated bench invocations) must not accumulate in /tmp
-      rmTree(runDir)
+      Try(util.Fs.deleteRecursive(runDir))
       (t, tele, bt)
     }
-    rmTree(base) // the replicated JSON corpus
+    Try(util.Fs.deleteRecursive(base)) // the replicated JSON corpus
     val runFailed = failed("cdc_replicate")
     // per-run rows IN CHRONOLOGICAL ORDER, each with its own steal/cpu/
     // iowait window AND its micro-batch breakdown (Σ addBatch /
@@ -513,15 +459,15 @@ object Bench {
     // both the honest measurement and the quiet-host estimate
     val refBatches: Seq[(Long, Long, Long)] = {
       val ok = runsTele.filter(_._1 > 0)
-      if (!runFailed && ok.nonEmpty) ok.minBy(_._1)._3.batchSnapshot
+      if (!runFailed && ok.nonEmpty) ok.minBy(_._1)._3.batchRows
       else Nil
     }
     val bestRawEps: Long = {
       val ok = runsTele.map(_._1).filter(_ > 0)
       if (runFailed || ok.isEmpty) 0L else (n / ok.min).toLong
     }
-    def adjEps(t: Double, bt: BatchTimes): Long =
-      clampedAdjEps(n, t, bt.batchSnapshot, refBatches, bestRawEps)
+    def adjEps(t: Double, bt: observe.CdcQueryListener): Long =
+      clampedAdjEps(n, t, bt.batchRows, refBatches, bestRawEps)
     lastCdcRuns = Some(runsTele.map { case (t, tele, bt) =>
       val eps = if (!runFailed && t > 0) (n / t).toLong else 0L
       val idleMs = math.max(0L, (t * 1000).toLong - bt.triggerMs)
@@ -531,7 +477,9 @@ object Bench {
         s""""wal_commit_ms":${bt.walCommitMs},""" +
         s""""trigger_ms":${bt.triggerMs},""" +
         s""""non_trigger_ms":$idleMs,""" +
-        s""""batch_rows":${bt.batchRowsJson}${stealCpuJson(tele)}}"""
+        s""""batch_rows":${bt.batchRows.map { case (id, ms, rows) =>
+          s"""{"id":$id,"add_batch_ms":$ms,"rows":$rows}"""
+        }.mkString("[", ",", "]")}${stealCpuJson(tele)}}"""
     }.mkString("[", ",", "]"))
     locally {
       val adjs = runsTele.map { case (t, _, bt) => adjEps(t, bt) }
@@ -561,7 +509,7 @@ object Bench {
         // steal/iowait columns, trust the fast runs)
         val shape =
           if (dom != "addBatch") "not addBatch-dominated"
-          else bt.frontLoadFrac match {
+          else frontLoadFrac(bt.batchRows) match {
             case None =>
               "insufficient per-batch data for a front-load verdict"
             case Some(frac) if frac > 0.5 =>
@@ -685,7 +633,7 @@ object Bench {
     */
   private def childMain(name: String, sfDir: String): Unit = {
     val j0 = cpuJiffies()
-    val spark = buildSpark()
+    val spark = util.Sessions.local("graft-bench")
     val (med, lo, hi) =
       if (name == "cdc_replicate") runCdcReplicate(spark, sfDir)
       else runFunnel(spark, sfDir, name)
@@ -789,7 +737,7 @@ object Bench {
       case None => ()
     }
     val jiffies0 = cpuJiffies()
-    val spark = buildSpark()
+    val spark = util.Sessions.local("graft-bench")
     // optional comma-separated query filter for isolating one query's
     // timing (diagnostics only — the driver runs the full set); when
     // active the headline carries "only":[...] so a partial run can
@@ -943,7 +891,7 @@ object Bench {
         // then NOT comparable to ScaleBench's fresh-JVM figures and
         // the headline says so via funnel_mode
         funnelMode = "in-process"
-        val s2 = buildSpark()
+        val s2 = util.Sessions.local("graft-bench")
         val rr = runFunnel(s2, sfDir, name)
         s2.stop()
         ChildStats(rr._1, rr._2, rr._3, None)
@@ -983,7 +931,7 @@ object Bench {
       if (!wanted("cdc_replicate")) zero
       else try {
         spawnChild("cdc_replicate").getOrElse {
-          val s2 = buildSpark()
+          val s2 = util.Sessions.local("graft-bench")
           try {
             val rr = runCdcReplicate(s2, sfDir)
             ChildStats(rr._1, rr._2, rr._3, None)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.Try
 
 import graft.text.Dedup
 import graft.vector.Similarity
@@ -144,6 +145,35 @@ object ScaleBench {
         val (sec, n) = timed(body)
         results += ((name, sec, n))
         println(s"""{"scale_query":"$name","sec":${math.rint(sec * 1000) / 1000},"rows":$n}""")
+      }
+    }
+    def record(name: String, n: Long): Unit = {
+      results += ((name, 0.0, n))
+      println(s"""{"scale_query":"$name","sec":0.0,"rows":$n}""")
+    }
+    // a census probe under the RocksDB state store (the CLI's at-scale
+    // provider): the drain's wall, then `*_state_rows` / `*_state_bytes`
+    // — the MAX keys-in-state / provider-reported bytes across every
+    // micro-batch, from the shared listener (recentProgress rings out
+    // at 100 entries) — and, for the capped probes, `*_truncated`
+    def stateProbe(name: String, inDir: String)(mk: DataFrame => DataFrame)(
+        truncatedOf: Option[DataFrame => Long] = None): Unit = if (wanted(name)) {
+      val runDir = java.nio.file.Files.createTempDirectory("graft-streamrun")
+      val listener = new graft.observe.CdcQueryListener()
+      spark.streams.addListener(listener)
+      try ops.StateStores.withProvider(spark, Some("rocksdb")) {
+        bench(name)(drainToParquet(spark, inDir, runDir, name)(mk))
+        listener.settle() // async bus — outside the timed window
+        val (k, b) = listener.maxFor(name).getOrElse((0L, 0L))
+        val stem = name.stripSuffix("_wall")
+        record(s"${stem}_state_rows", k)
+        record(s"${stem}_state_bytes", b)
+        truncatedOf.foreach(f =>
+          record(s"${stem}_truncated", f(spark.read.parquet(s"$runDir/out"))))
+      } finally {
+        spark.streams.removeListener(listener)
+        // a failed probe must not leak checkpoint+out
+        Try(util.Fs.deleteRecursive(runDir))
       }
     }
 
@@ -466,11 +496,6 @@ object ScaleBench {
           "abandon_stream_wall", "paths_stream_wall",
           "funnel_stream_wall", "growth_stream_wall",
           "transitions_stream_wall", "census_crash_wall").exists(wanted)) {
-        def rmTree(p: java.nio.file.Path): Unit = try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-            .foreach(q => java.nio.file.Files.deleteIfExists(q))
-        } catch { case _: Exception => () }
         val streamBase =
           java.nio.file.Files.createTempDirectory("graft-censusstream")
         val inDir = s"$streamBase/in"
@@ -503,20 +528,11 @@ object ScaleBench {
         bench("census_stream_wall") {
           val runDir =
             java.nio.file.Files.createTempDirectory("graft-censusrun")
-          val src = spark.readStream
-            .schema(ops.SessionCensusCli.inputSchema)
-            .option("maxFilesPerTrigger", 2).json(inDir)
-          val q = graft.analytics.StreamingAnalytics
-            .sessionCensusStream(src, "user_id", "event_type", "ts",
-              "event_id", 1800L * 1000000L, watermark = "60 seconds")
-            .toDF().writeStream.format("parquet")
-            .option("path", s"$runDir/out")
-            .option("checkpointLocation", s"$runDir/ck")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          val n = spark.read.parquet(s"$runDir/out").count()
-          rmTree(runDir)
+          val n = drainToParquet(spark, inDir, runDir, "census_stream_wall")(src =>
+            graft.analytics.StreamingAnalytics.sessionCensusStream(src,
+              "user_id", "event_type", "ts", "event_id", 1800L * 1000000L,
+              watermark = "60 seconds").toDF())
+          Try(util.Fs.deleteRecursive(runDir))
           n
         }
         // the abandonment stream on the SAME corpus: replicas carry
@@ -528,102 +544,38 @@ object ScaleBench {
         bench("abandon_stream_wall") {
           val runDir =
             java.nio.file.Files.createTempDirectory("graft-abandonrun")
-          val src = spark.readStream
-            .schema(ops.SessionCensusCli.inputSchema)
-            .option("maxFilesPerTrigger", 2).json(inDir)
-          val q = graft.analytics.StreamingAnalytics
-            .abandonmentStream(src, "user_id", "event_type", "ts",
-              "event_id", "view", "purchase", 3600L * 1000000L,
-              watermark = "60 seconds")
-            .toDF().writeStream.format("parquet")
-            .option("path", s"$runDir/out")
-            .option("checkpointLocation", s"$runDir/ck")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          val n = spark.read.parquet(s"$runDir/out").count()
-          rmTree(runDir)
+          val n = drainToParquet(spark, inDir, runDir, "abandon_stream_wall")(src =>
+            graft.analytics.StreamingAnalytics.abandonmentStream(src,
+              "user_id", "event_type", "ts", "event_id", "view", "purchase",
+              3600L * 1000000L, watermark = "60 seconds").toDF())
+          Try(util.Fs.deleteRecursive(runDir))
           n
         }
         // the ROUND-16 CENSUS FAMILY at scale (round-17 decade rows):
         // paths/funnel (stamp-buffered, maxStamps-capped), growth and
         // transitions (durable per-user carries) — each driven through
-        // the SAME chronological corpus under the RocksDB state store
-        // (the CLI's at-scale provider), with the per-batch state-store
-        // telemetry recorded alongside the wall: `*_state_rows` is the
-        // MAX keys-in-state across micro-batches (must track user
-        // cardinality — invariant across factors for this corpus, whose
-        // replicas share each user's timeline), `*_state_bytes` the max
-        // provider-reported memory. Walls must track event volume;
-        // state must not.
+        // the SAME chronological corpus as a state probe. `*_state_rows`
+        // must track user cardinality — invariant across factors for
+        // this corpus, whose replicas share each user's timeline. Walls
+        // must track event volume; state must not.
         locally {
-          val providerConf = "spark.sql.streaming.stateStore.providerClass"
-          val prevProvider = spark.conf.getOption(providerConf)
           val steps = Seq("view", "click", "purchase")
           val gapUs = 1800L * 1000000L
-          def streamProbe(name: String)(
-              mk: DataFrame => DataFrame): Unit = if (wanted(name)) {
-            spark.conf.set(providerConf,
-              ops.StateStores.providerClass("rocksdb"))
-            // the shared max-fold listener (SessionCensusCli uses the
-            // same one): sees EVERY micro-batch, where recentProgress
-            // rings out at 100 entries
-            val stateMax = new graft.observe.StateMaxListener()
-            spark.streams.addListener(stateMax)
-            try {
-              var stateRows = 0L
-              var stateBytes = 0L
-              bench(name) {
-                val runDir =
-                  java.nio.file.Files.createTempDirectory("graft-streamrun")
-                val src = spark.readStream
-                  .schema(ops.SessionCensusCli.inputSchema)
-                  .option("maxFilesPerTrigger", 2).json(inDir)
-                val q = mk(src).writeStream.format("parquet")
-                  .option("path", s"$runDir/out")
-                  .option("checkpointLocation", s"$runDir/ck")
-                  .queryName(name)
-                  .trigger(
-                    org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                  .start()
-                q.awaitTermination()
-                val n = spark.read.parquet(s"$runDir/out").count()
-                rmTree(runDir)
-                n
-              }
-              stateMax.settle() // async bus — outside the timed window
-              stateMax.maxFor(name).foreach { case (k, b) =>
-                stateRows = k; stateBytes = b
-              }
-              Seq(s"${name.stripSuffix("_wall")}_state_rows" -> stateRows,
-                s"${name.stripSuffix("_wall")}_state_bytes" -> stateBytes)
-                .foreach { case (k, v) =>
-                  results += ((k, 0.0, v))
-                  println(s"""{"scale_query":"$k","sec":0.0,"rows":$v}""")
-                }
-            } finally {
-              spark.streams.removeListener(stateMax)
-              prevProvider match {
-                case Some(v) => spark.conf.set(providerConf, v)
-                case None => spark.conf.unset(providerConf)
-              }
-            }
-          }
-          streamProbe("paths_stream_wall")(src =>
+          stateProbe("paths_stream_wall", inDir)(src =>
             graft.analytics.StreamingAnalytics.sessionPathsStream(src,
               "user_id", "event_type", "ts", "event_id", gapUs,
-              watermark = "60 seconds").toDF())
-          streamProbe("funnel_stream_wall")(src =>
+              watermark = "60 seconds").toDF())()
+          stateProbe("funnel_stream_wall", inDir)(src =>
             graft.analytics.StreamingAnalytics.sessionFunnelStream(src,
               "user_id", "event_type", "ts", steps, gapUs,
-              watermark = "60 seconds").toDF())
-          streamProbe("growth_stream_wall")(src =>
+              watermark = "60 seconds").toDF())()
+          stateProbe("growth_stream_wall", inDir)(src =>
             graft.analytics.StreamingAnalytics.growthAccountingStream(src,
-              "user_id", "ts", watermark = "60 seconds").toDF())
-          streamProbe("transitions_stream_wall")(src =>
+              "user_id", "ts", watermark = "60 seconds").toDF())()
+          stateProbe("transitions_stream_wall", inDir)(src =>
             graft.analytics.StreamingAnalytics.transitionsStream(src,
               "user_id", "event_type", "ts", "event_id",
-              watermark = "60 seconds").toDF())
+              watermark = "60 seconds").toDF())()
 
           // MID-DRAIN CRASH AT VOLUME (round 19): the torn-WAL-commit
           // exactly-once proof, fixture-scale in SessionCensusCliSpec,
@@ -634,10 +586,8 @@ object ScaleBench {
           // iff the recovered closed-session count equals the clean
           // run's — the row the decade table carries as the
           // exactly-once-at-10× evidence.
-          if (wanted("census_crash_wall")) {
-            spark.conf.set(providerConf,
-              ops.StateStores.providerClass("rocksdb"))
-            try {
+          if (wanted("census_crash_wall"))
+            ops.StateStores.withProvider(spark, Some("rocksdb")) {
               val scratch = java.nio.file.Files
                 .createTempDirectory("graft-censuscrash")
               try {
@@ -650,21 +600,14 @@ object ScaleBench {
                   r
                 }
                 val ok = if (cleanN == recoveredN && cleanN > 0L) 1L else 0L
-                results += (("census_crash_match", 0.0, ok))
-                println(s"""{"scale_query":"census_crash_match","sec":0.0,"rows":$ok}""")
+                record("census_crash_match", ok)
                 if (ok == 0L)
                   System.err.println("[scale] census_crash_match FAILED: " +
                     s"clean=$cleanN recovered=$recoveredN")
-              } finally rmTree(scratch)
-            } finally {
-              prevProvider match {
-                case Some(v) => spark.conf.set(providerConf, v)
-                case None => spark.conf.unset(providerConf)
-              }
+              } finally Try(util.Fs.deleteRecursive(scratch))
             }
-          }
         }
-        rmTree(streamBase)
+        Try(util.Fs.deleteRecursive(streamBase))
       }
       // gated: the localCheckpoint is EAGER, and an isolated stream-
       // probe run must not pay a lineitem materialization it never uses
@@ -695,11 +638,6 @@ object ScaleBench {
     // scales ONLY the bot's event count, so any state growth across
     // factors is a cap leak, not a data artifact.
     if (Seq("paths_botcap_wall", "funnel_botcap_wall").exists(wanted)) {
-      def rmTree(p: java.nio.file.Path): Unit = try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(q => java.nio.file.Files.deleteIfExists(q))
-      } catch { case _: Exception => () }
       val bf = math.min(factor, 16)
       val botStamps = 1000
       val nBot = 10L * botStamps * bf
@@ -721,67 +659,40 @@ object ScaleBench {
         lit("view").as("event_type"))
       ops.JsonStage.stageFrame(botEv.unionByName(sentinel), botIn,
         orderBy = "ts", parts = 8)
-      val providerConf = "spark.sql.streaming.stateStore.providerClass"
-      def botProbe(name: String)(mk: DataFrame => DataFrame)(
-          truncatedOf: DataFrame => Long): Unit = if (wanted(name)) {
-        val prevProvider = spark.conf.getOption(providerConf)
-        spark.conf.set(providerConf,
-          ops.StateStores.providerClass("rocksdb"))
-        val stateMax = new graft.observe.StateMaxListener()
-        spark.streams.addListener(stateMax)
-        val runDir =
-          java.nio.file.Files.createTempDirectory("graft-botrun")
-        try {
-          bench(name) {
-            val src = spark.readStream
-              .schema(ops.SessionCensusCli.inputSchema)
-              .option("maxFilesPerTrigger", 2).json(botIn)
-            val q = mk(src).writeStream.format("parquet")
-              .option("path", s"$runDir/out")
-              .option("checkpointLocation", s"$runDir/ck")
-              .queryName(name)
-              .trigger(
-                org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            q.awaitTermination()
-            spark.read.parquet(s"$runDir/out").count()
-          }
-          stateMax.settle() // async bus — outside the timed window
-          val (k, b) = stateMax.maxFor(name).getOrElse((0L, 0L))
-          val out = spark.read.parquet(s"$runDir/out")
-          Seq(s"${name.stripSuffix("_wall")}_state_rows" -> k,
-            s"${name.stripSuffix("_wall")}_state_bytes" -> b,
-            s"${name.stripSuffix("_wall")}_truncated" -> truncatedOf(out))
-            .foreach { case (kk, v) =>
-              results += ((kk, 0.0, v))
-              println(s"""{"scale_query":"$kk","sec":0.0,"rows":$v}""")
-            }
-        } finally {
-          rmTree(runDir) // a failed probe must not leak checkpoint+out
-          spark.streams.removeListener(stateMax)
-          prevProvider match {
-            case Some(v) => spark.conf.set(providerConf, v)
-            case None => spark.conf.unset(providerConf)
-          }
-        }
-      }
       // the staged bot corpus (up to 160k JSON lines) must not leak in
       // /tmp when a probe throws mid-bench — same finally discipline as
       // each probe's inner runDir
       try {
-        botProbe("paths_botcap_wall")(src =>
+        stateProbe("paths_botcap_wall", botIn)(src =>
           graft.analytics.StreamingAnalytics.sessionPathsStream(src,
             "user_id", "event_type", "ts", "event_id", gapUs,
-            watermark = "60 seconds", maxStamps = botStamps).toDF())(out =>
-          out.filter(col("path").endsWith(">…")).count())
-        botProbe("funnel_botcap_wall")(src =>
+            watermark = "60 seconds", maxStamps = botStamps).toDF())(Some(out =>
+          out.filter(col("path").endsWith(">…")).count()))
+        stateProbe("funnel_botcap_wall", botIn)(src =>
           graft.analytics.StreamingAnalytics.sessionFunnelStream(src,
             "user_id", "event_type", "ts", steps, gapUs,
-            watermark = "60 seconds", maxStamps = botStamps).toDF())(out =>
-          out.filter(col("truncated")).count())
-      } finally rmTree(botBase)
+            watermark = "60 seconds", maxStamps = botStamps).toDF())(Some(out =>
+          out.filter(col("truncated")).count()))
+      } finally Try(util.Fs.deleteRecursive(botBase))
     }
     results.toList
+  }
+
+  /** One AvailableNow drain of `mk` over the staged JSON event corpus
+    * at `inDir` (2 files per trigger) into `runDir/out`, checkpointed
+    * at `runDir/ck`; returns the output row count. */
+  private def drainToParquet(spark: SparkSession, inDir: String,
+      runDir: java.nio.file.Path, name: String)(
+      mk: DataFrame => DataFrame): Long = {
+    val src = spark.readStream.schema(ops.SessionCensusCli.inputSchema)
+      .option("maxFilesPerTrigger", 2).json(inDir)
+    mk(src).writeStream.format("parquet")
+      .option("path", s"$runDir/out")
+      .option("checkpointLocation", s"$runDir/ck")
+      .queryName(name)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    spark.read.parquet(s"$runDir/out").count()
   }
 
   /** Exactly-once under a MID-DRAIN crash, at whatever volume `inDir`
@@ -881,43 +792,36 @@ object ScaleBench {
       n
     }.getOrElse(10)
     val workDir = args.lift(2).getOrElse("/tmp/graft_scale")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scale-bench")
-      // shuffle partitions must scale with the FACTOR, not the core
-      // count: at factor 100 the candidate-pair distinct pushes
-      // billions of rows through the exchange, and 32 partitions means
-      // ~100 M-row spilling sort-fallback aggregates per task (measured:
-      // heap exhaustion in UnsafeSorterSpillReader at 64 g). A cluster
-      // sizes this as data/128 MB tasks; locally,
-      // SPARK_GRAFT_SHUFFLE_PARTITIONS=512 is right for factor 100.
-      // AQE coalesces back when oversized, so erring high is safe.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-          .flatMap(_.toIntOption).filter(_ > 0)
-          .orElse(sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption))
-          .getOrElse(32).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_COALESCE", "true"))
-      // the DEFAULT (10 MB) preserves Spark's stock
-      // autoBroadcastJoinThreshold — this config is a no-op unless the
-      // env var raises it. At factor 100 the q82 verification join's
-      // probe side is ~2 B candidate pairs while the build side
-      // (per-doc shingle arrays) is a few hundred MB: setting
-      // SPARK_GRAFT_BROADCAST_THRESHOLD=1073741824 (1 GiB — above the
-      // build side, like SPARK_GRAFT_SHUFFLE_PARTITIONS=512 for the
-      // same factor) turns a TB-scale pair shuffle (measured:
-      // scratch-disk exhaustion) into a streaming broadcast-hash
-      // verify — the decision a cluster's AQE makes with executor
-      // memory to spare
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST_THRESHOLD", "10485760"))
-      // NOTE: driver heap cannot be set here (JVM already launched) —
-      // size it at launch, e.g. `sbt -J-Xmx8g "runMain graft.ScaleBench"`
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // shuffle partitions must scale with the FACTOR, not the core
+    // count: at factor 100 the candidate-pair distinct pushes
+    // billions of rows through the exchange, and 32 partitions means
+    // ~100 M-row spilling sort-fallback aggregates per task (measured:
+    // heap exhaustion in UnsafeSorterSpillReader at 64 g). A cluster
+    // sizes this as data/128 MB tasks; locally,
+    // SPARK_GRAFT_SHUFFLE_PARTITIONS=512 is right for factor 100.
+    // AQE coalesces back when oversized, so erring high is safe.
+    val shuffleOverride = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+      .flatMap(_.toIntOption).filter(_ > 0)
+      .map("spark.sql.shuffle.partitions" -> _.toString)
+    // the DEFAULT (10 MB) broadcast threshold preserves Spark's stock
+    // autoBroadcastJoinThreshold — this config is a no-op unless the
+    // env var raises it. At factor 100 the q82 verification join's
+    // probe side is ~2 B candidate pairs while the build side
+    // (per-doc shingle arrays) is a few hundred MB: setting
+    // SPARK_GRAFT_BROADCAST_THRESHOLD=1073741824 (1 GiB — above the
+    // build side, like SPARK_GRAFT_SHUFFLE_PARTITIONS=512 for the
+    // same factor) turns a TB-scale pair shuffle (measured:
+    // scratch-disk exhaustion) into a streaming broadcast-hash
+    // verify — the decision a cluster's AQE makes with executor
+    // memory to spare. NOTE: the heap cannot be set here (JVM
+    // already launched) — size it at launch, e.g.
+    // `sbt -J-Xmx8g "runMain graft.ScaleBench"`
+    val spark = util.Sessions.local("graft-scale-bench",
+      shuffleOverride.toSeq ++ Seq(
+        "spark.sql.adaptive.coalescePartitions.enabled" ->
+          sys.env.getOrElse("SPARK_GRAFT_AQE_COALESCE", "true"),
+        "spark.sql.autoBroadcastJoinThreshold" ->
+          sys.env.getOrElse("SPARK_GRAFT_BROADCAST_THRESHOLD", "10485760")): _*)
 
     // language/quality gates stay open: the salt tokens depress stopword
     // ratios identically at both factors, and the scale question is about

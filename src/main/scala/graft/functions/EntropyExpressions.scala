@@ -23,9 +23,8 @@ object EntropyKernels {
     * character there too, which `codePointAt` mirrors), the weighted
     * sum Σ c·⌊ln c·10⁶⌋ is exact 64-bit integer arithmetic, and the
     * final division is one floor division by n (`floorDiv` ≡ the SQL
-    * `(x − pmod(x, n)) / n`). Returns (n_chars_counted, entropy_fp)
-    * for non-empty input; the caller filters empties, matching the SQL
-    * shape's `length > 0` gate. */
+    * `(x − pmod(x, n)) / n`). Returns (n_chars_counted, entropy_fp);
+    * the empty string has no characters and returns (0, 0). */
   def charEntropy(s: UTF8String): InternalRow = {
     val str = s.toString
     val counts = new java.util.HashMap[Integer, Array[Long]]()
@@ -44,8 +43,8 @@ object EntropyKernels {
       val c = it.next()(0)
       wsum += c * lfp(c)
     }
-    val cross = lfp(n) * n - wsum
-    new GenericInternalRow(Array[Any](n, java.lang.Math.floorDiv(cross, n)))
+    val entropy = if (n == 0L) 0L else java.lang.Math.floorDiv(lfp(n) * n - wsum, n)
+    new GenericInternalRow(Array[Any](n, entropy))
   }
 }
 
@@ -56,9 +55,9 @@ object EntropyKernels {
   * row per corpus character; this is a single fused pass over the
   * string with an alphabet-sized local map, bit-identical by the kernel
   * contract above (TextSpec pins native ≡ SQL shape on a Unicode
-  * corpus). NULL in → NULL out; empty input must be filtered by the
-  * caller (entropy of zero characters is undefined — the DF API keeps
-  * the `length > 0` gate). */
+  * corpus). NULL in → NULL out; the empty string → (0, 0) (entropy of
+  * zero characters is undefined, so the DF API keeps its `length > 0`
+  * gate; the guard keeps plain-SQL callers from dividing by zero). */
 case class CharEntropy(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StructType(Seq(
     StructField("n_chars_counted", LongType, nullable = false),

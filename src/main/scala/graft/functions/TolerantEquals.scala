@@ -118,6 +118,7 @@ object GraftFunctions {
       exprs => DotProduct(exprs(0), exprs(1))),
     ("poly_hash62", classOf[PolyHash62], exprs => PolyHash62(exprs(0))),
     ("simhash62", classOf[SimHash62], exprs => SimHash62(exprs(0))),
+    ("char_entropy", classOf[CharEntropy], exprs => CharEntropy(exprs(0))),
     ("minhash_sig", classOf[MinHashSig],
       exprs => MinHashSig(exprs(0), intLit(exprs(1), "minhash_sig numHashes"))),
     ("shingle_hashes", classOf[ShingleHashes],
@@ -136,8 +137,8 @@ object GraftFunctions {
     }
 }
 
-/** Session extension installing [[GraftFunctions.all]]:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+/** Session extension installing [[GraftFunctions.all]]: pass
+  * `new GraftExtensions` to a session builder's `withExtensions`, or set
   * `spark.sql.extensions=graft.functions.GraftExtensions`. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier

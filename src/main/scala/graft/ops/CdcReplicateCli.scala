@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.streaming.Trigger
 import graft.cdc.CdcPipeline
-import graft.observe.{CdcQueryListener, MetricsRegistry}
+import graft.observe.CdcQueryListener
 
 /** Streaming replication launcher (the engine's analog of bringing up the
   * reference's source+sink connector pair; pipeline shape SURVEY §3.1).
@@ -43,14 +43,7 @@ object CdcReplicateCli {
       sys.exit(10)
     }
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-cdc-replicate")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local("graft-cdc-replicate")
     run(spark, input, warehouse, checkpoint, tables, columns)
     spark.stop()
   }
@@ -58,20 +51,17 @@ object CdcReplicateCli {
   /** Launcher body over an existing session — drains the replication
     * loop with AvailableNow and prints the contract lines (per-table
     * rows, records_replicated_total, and the per-drain state-bound
-    * telemetry the census launcher emits). Listeners come off the
+    * telemetry the census launcher emits). The listener comes off the
     * session on every exit path, so an embedded caller's repeated runs
     * don't accumulate orphans. */
   def run(spark: SparkSession, input: String, warehouse: String,
       checkpoint: String, tables: Map[String, Seq[String]],
       columns: Seq[String] = Seq("username", "status")): Unit = {
-    val registry = new MetricsRegistry()
-    val regListener = new CdcQueryListener(registry)
-    spark.streams.addListener(regListener)
-    // the same per-drain state-bound telemetry SessionCensusCli emits
-    // (every-batch maxima via listener, immune to the 100-entry
-    // recentProgress ring)
-    val stateMax = new graft.observe.StateMaxListener()
-    spark.streams.addListener(stateMax)
+    // the contract metric and the same per-drain state-bound telemetry
+    // SessionCensusCli emits (every-batch maxima, immune to the
+    // 100-entry recentProgress ring)
+    val listener = new CdcQueryListener()
+    spark.streams.addListener(listener)
     try {
 
     // envelope: topic/operation/commit_timestamp + per-table key and data
@@ -116,7 +106,8 @@ object CdcReplicateCli {
     // by query id and the registry key is fully reconstructible — an
     // embedded caller's concurrent query can't inflate the count
     val mineMetrics = mine.map(id => s"cdc_records_replicated_total{query=$id}")
-    val replicatedRow = registry.snapshot(spark)
+    listener.settle() // async listener bus — drain before reading
+    val replicatedRow = listener.registry.snapshot(spark)
       .filter(org.apache.spark.sql.functions.col("metric")
         .isin(mineMetrics.toSeq: _*))
       .agg(org.apache.spark.sql.functions.coalesce(
@@ -128,11 +119,10 @@ object CdcReplicateCli {
     // zero row is the bound being reported, not a missing metric. Any
     // stateful operator a future pipeline shape adds shows up as its
     // own nonzero row automatically.
-    stateMax.settle() // async listener bus — drain before reading
     // only THIS run's queries (unnamed → keyed by query id) may feed
     // the CDC contract line — an embedded caller's concurrent stateful
     // query must not masquerade as CDC state
-    val mineState = stateMax.all.view.filterKeys(mine).toMap
+    val mineState = listener.all.view.filterKeys(mine).toMap
     if (mineState.isEmpty)
       println("""{"state": "cdc-merge", "max_keys": 0, "max_bytes": 0}""")
     else mineState.toSeq.sortBy(_._1).foreach { case (n, (k, b)) =>
@@ -140,9 +130,6 @@ object CdcReplicateCli {
       println(s"""{"state": "$nm", "max_keys": $k, "max_bytes": $b}""")
     }
 
-    } finally {
-      spark.streams.removeListener(stateMax)
-      spark.streams.removeListener(regListener)
-    }
+    } finally spark.streams.removeListener(listener)
   }
 }

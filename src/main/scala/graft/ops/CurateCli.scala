@@ -617,13 +617,7 @@ object CurateCli {
     val outDir = pos.lift(1).getOrElse("/tmp/curated")
     val minQ = pos.lift(2).map(_.toDouble).getOrElse(0.5)
     val full = pos.lift(3).contains("full")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local("graft-curate")
     val docs = graft.Tables.documents(spark, sfDir)
     val cfg =
       if (full) Config(minQuality = minQ, mixDefaultPpm = 900000L,

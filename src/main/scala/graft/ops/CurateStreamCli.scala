@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
-import graft.observe.{CdcQueryListener, MetricsRegistry}
+import graft.observe.CdcQueryListener
 
 /** Streaming ingest-curation launcher — the ops entry point that wires
   * [[CurateCli.curateStream]] (exact-dedup + language + quality gates)
@@ -85,32 +85,15 @@ object CurateStreamCli {
     StructField("text", StringType),
     StructField("source", StringType)))
 
-  private val ProviderConf = "spark.sql.streaming.stateStore.providerClass"
-
-  /** `--state-store` values → provider classes: [[StateStores]] (the
-    * shared home — see its note on the custom-class casing bug the
-    * per-CLI copies carried). At 100-TB ingest the per-(band,bucket)
-    * LSH state outgrows executor heaps — `rocksdb` moves it off-heap
-    * with changelog checkpointing. */
-  private def providerClass(name: String): String =
-    StateStores.providerClass(name)
-
   /** Run both queries to drain (AvailableNow) against the session and
     * return total rows landed / candidates flagged ACROSS ALL RUNS of
     * this checkpoint (counted from the output tables, so restarts
-    * accumulate — the e2e restart test pins exactly that). */
-  def run(spark: SparkSession, cfg: StreamConfig): Summary = {
-    // the provider conf is read per-query at START — set it for this
-    // run only and restore after the drain, so a shared session doesn't
-    // leak the choice into unrelated streaming queries
-    val prevProvider = spark.conf.getOption(ProviderConf)
-    cfg.stateStore.foreach(s => spark.conf.set(ProviderConf, providerClass(s)))
-    try doRun(spark, cfg)
-    finally if (cfg.stateStore.isDefined) prevProvider match {
-      case Some(v) => spark.conf.set(ProviderConf, v)
-      case None => spark.conf.unset(ProviderConf)
-    }
-  }
+    * accumulate — the e2e restart test pins exactly that). At 100-TB
+    * ingest the per-(band,bucket) LSH state outgrows executor heaps —
+    * `--state-store rocksdb` moves it off-heap with changelog
+    * checkpointing ([[StateStores]]). */
+  def run(spark: SparkSession, cfg: StreamConfig): Summary =
+    StateStores.withProvider(spark, cfg.stateStore)(doRun(spark, cfg))
 
   private def doRun(spark: SparkSession, cfg: StreamConfig): Summary = {
     // the two eval modes write the landing zone with DIFFERENT sink
@@ -369,23 +352,16 @@ object CurateStreamCli {
       case Left(err) => System.err.println(s"[config] $err"); sys.exit(10)
       case Right(c) => c
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-curate-stream")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val registry = new MetricsRegistry()
-    spark.streams.addListener(new CdcQueryListener(registry))
-
-    val summary = run(spark, cfg)
+    val spark = graft.util.Sessions.local("graft-curate-stream")
+    val listener = new CdcQueryListener()
+    spark.streams.addListener(listener)
+    val summary =
+      try { val s = run(spark, cfg); listener.settle(); s }
+      finally spark.streams.removeListener(listener)
 
     // per-query input-row totals from the listener registry — the same
     // observability surface the CDC CLI exposes (M3/ST10)
-    val snap = registry.snapshot(spark)
+    val snap = listener.registry.snapshot(spark)
       .filter("metric like 'cdc_records_replicated_total%'")
       .select("metric", "value")
       .collect()

@@ -112,12 +112,7 @@ object DlqReplay {
     if (dlqPath.isEmpty || inputDir.isEmpty) {
       System.err.println("[config] --dlq and --input required"); sys.exit(10)
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local("graft-dlq-replay")
     val r = replay(spark, dlqPath, inputDir, maxRetries, errorClass, dryRun = !execute)
     println(s"""{"selected": ${r.selected}, "replayed": ${r.replayed}, "dry_run": ${r.dryRun}}""")
     spark.stop()

@@ -132,14 +132,7 @@ object JsonStage {
       System.err.println("[config] --input and --output required, --parts >= 1")
       sys.exit(10)
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-json-stage")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local("graft-json-stage")
     val n = stage(spark, input, output, orderBy, select, parts)
     println(s"""{"staged_files": $n, "output": "$output"}""")
     spark.stop()

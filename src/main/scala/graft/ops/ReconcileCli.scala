@@ -82,15 +82,7 @@ object ReconcileCli {
       case Left(err) =>
         System.err.println(s"[config] $err"); sys.exit(10)
       case Right(cfg) =>
-        val spark = SparkSession.builder()
-          .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-          .appName("graft-reconcile")
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = graft.util.Sessions.local("graft-reconcile")
         try sys.exit(run(spark, cfg))
         finally spark.stop()
     }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
 import graft.analytics.StreamingAnalytics
+import graft.observe.CdcQueryListener
 
 /** Streaming event-census launcher — the ops entry point that wires
   * the session-census stream family
@@ -102,26 +103,13 @@ object SessionCensusCli {
     StructField("ts", TimestampType),
     StructField("event_type", StringType)))
 
-  private val ProviderConf = "spark.sql.streaming.stateStore.providerClass"
-
-  /** The shared [[StateStores]] mapping (and its checkpoint-binding
-    * caveat): `rocksdb` for large off-heap state, `hdfs` for Spark's
-    * heap-backed default, anything else verbatim as a provider class. */
-  private def providerClass(name: String): String =
-    StateStores.providerClass(name)
-
   /** Drain both censuses (AvailableNow) and return totals ACROSS ALL
     * RUNS of this checkpoint (counted from the output tables, so
-    * restarts accumulate). */
-  def run(spark: SparkSession, cfg: CensusConfig): Summary = {
-    val prevProvider = spark.conf.getOption(ProviderConf)
-    cfg.stateStore.foreach(s => spark.conf.set(ProviderConf, providerClass(s)))
-    try doRun(spark, cfg)
-    finally if (cfg.stateStore.isDefined) prevProvider match {
-      case Some(v) => spark.conf.set(ProviderConf, v)
-      case None => spark.conf.unset(ProviderConf)
-    }
-  }
+    * restarts accumulate). `listener` is attached for the drain only;
+    * pass one in to read its registry afterwards. */
+  def run(spark: SparkSession, cfg: CensusConfig,
+      listener: CdcQueryListener = new CdcQueryListener()): Summary =
+    StateStores.withProvider(spark, cfg.stateStore)(doRun(spark, cfg, listener))
 
   /** JSON string literal for the rollup print lines — interpolating a
     * raw value would break the machine-readable contract on a quote or
@@ -155,7 +143,8 @@ object SessionCensusCli {
         "filters. Point --funnels at a fresh dir, or migrate the old one " +
         "(read with mergeSchema, coalesce(truncated, false), rewrite).")
 
-  private def doRun(spark: SparkSession, cfg: CensusConfig): Summary = {
+  private def doRun(spark: SparkSession, cfg: CensusConfig,
+      listener: CdcQueryListener): Summary = {
     // refuse a pre-upgrade funnel output BEFORE any query starts (and
     // before any checkpoint mutation) — see LegacyFunnelDirException
     cfg.funnels.foreach { dir =>
@@ -174,8 +163,7 @@ object SessionCensusCli {
     // (including a .start() that throws before the await block), or an
     // embedded caller's repeated runs accumulate orphans — hence the
     // try/finally spanning start-to-telemetry.
-    val stateMax = new graft.observe.StateMaxListener()
-    spark.streams.addListener(stateMax)
+    spark.streams.addListener(listener)
     val censusNames = Set("session-census", "abandonment-verdicts",
       "session-funnel", "growth-accounting", "session-paths",
       "journey-transitions")
@@ -269,10 +257,10 @@ object SessionCensusCli {
     // --max-stamps). The same numbers ScaleBench's decade rows pin at
     // 10×/16× volume, surfaced here so an operator can watch the
     // bound hold in production.
-    stateMax.settle() // async bus — drain before reading
+    listener.settle() // async bus — drain before reading
     (Seq(sessions) ++ verdictQ ++ funnelQ ++ growthQ ++ pathsQ ++ transQ)
       .foreach { q =>
-        stateMax.maxFor(q.name).foreach { case (k, b) =>
+        listener.maxFor(q.name).foreach { case (k, b) =>
           println(s"""{"state": ${jstr(q.name)}, """ +
             s""""max_keys": $k, "max_bytes": $b}""")
         }
@@ -286,7 +274,7 @@ object SessionCensusCli {
       spark.streams.active.filter(q => censusNames(q.name)).foreach(q =>
         try q.stop() catch { case _: Exception => () })
       throw t
-    } finally spark.streams.removeListener(stateMax)
+    } finally spark.streams.removeListener(listener)
 
     // a run that closed nothing legitimately leaves no parquet behind —
     // only THAT case maps to zero (the CurateStreamCli rule)
@@ -436,24 +424,16 @@ object SessionCensusCli {
       case Left(err) => System.err.println(s"[config] $err"); sys.exit(10)
       case Right(c) => c
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-session-census")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local("graft-session-census")
     // the same per-query observability surface the CDC and curation
     // CLIs expose (M3/ST10): input-row totals via the listener registry
-    val registry = new graft.observe.MetricsRegistry()
-    spark.streams.addListener(new graft.observe.CdcQueryListener(registry))
-    val summary = try run(spark, cfg) catch {
+    val listener = new CdcQueryListener()
+    val summary = try run(spark, cfg, listener) catch {
       case e: LegacyFunnelDirException =>
         System.err.println(s"[config] ${e.getMessage}")
         spark.stop(); sys.exit(10)
     }
-    registry.snapshot(spark)
+    listener.registry.snapshot(spark)
       .filter("metric like 'cdc_records_replicated_total%'")
       .select("metric", "value").collect()
       .foreach(r => println(

@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.spark.sql.SparkSession
+
 /** The ONE `--state-store` name mapping every streaming CLI shares
   * ([[CurateStreamCli]], [[SessionCensusCli]] — a forked copy shipped
   * a shared latent bug: the old per-CLI version lowercased the name
@@ -20,5 +22,21 @@ private[graft] object StateStores {
     case "hdfs" =>
       "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
     case _ => name // the ORIGINAL casing — a class name is case-sensitive
+  }
+
+  /** Runs `body` with the session's provider set to `name` (unchanged
+    * when None). The provider conf is read per query at START, so the
+    * setting covers the queries `body` starts and is restored on every
+    * exit path — a shared session must not leak the choice into
+    * unrelated streaming queries. */
+  def withProvider[T](spark: SparkSession, name: Option[String])(body: => T): T = {
+    val conf = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(conf)
+    name.foreach(n => spark.conf.set(conf, providerClass(n)))
+    try body
+    finally if (name.isDefined) prev match {
+      case Some(v) => spark.conf.set(conf, v)
+      case None => spark.conf.unset(conf)
+    }
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Salting
+
 /** Deduplication operators over a documents table — the four standard
   * training-corpus techniques, each designed around ONE shuffle on a
   * bucket/hash key so the plan scales to 100 TB:
@@ -164,12 +166,6 @@ object Dedup {
     java.lang.Math.floorMod(h, shards.toLong)
   }
 
-  /** Bounded salt width for the pair-verification repartitions: wide
-    * enough to break a hot id_a across tasks, narrow enough that the
-    * (id_a, salt) key space stays ≫ partition count (guide §2.5's
-    * 20-100× rule is carried by id_a's own cardinality). */
-  private val pairSalt = 16
-
   /** Banded candidate pairs from a signature index: ids sharing at least
     * one full band bucket, each unordered pair once. id-only join
     * (signatures would bloat the shuffle). */
@@ -194,10 +190,10 @@ object Dedup {
       // the (id_a, id_b) pin would be collapsed into the distinct's own
       // coalescible exchange, so key by id_a SALTED with a bounded hash
       // of id_b: a hub document pairing with thousands of others spreads
-      // over pairSalt partitions instead of concentrating its
+      // over Salting.pairSalt partitions instead of concentrating its
       // verification in one (a pinned REPARTITION_BY_NUM also opts out
       // of AQE skew-splitting, so the salt is the only skew valve here)
-      .repartition(parts, col("id_a"), pmod(xxhash64(col("id_b")), lit(pairSalt)))
+      .repartition(parts, col("id_a"), pmod(xxhash64(col("id_b")), lit(Salting.pairSalt)))
   }
 
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
@@ -836,11 +832,11 @@ object Dedup {
       // a pinned repartition with the distinct's own (id_a, id_b) keys
       // is planned as redundant and collapsed into the coalescible
       // distinct exchange — so key by id_a SALTED with a bounded hash of
-      // id_b ([[pairSalt]]): the pin survives AND a hub id_a's
+      // id_b ([[Salting.pairSalt]]): the pin survives AND a hub id_a's
       // per-pair array_intersect work spreads instead of landing in one
       // partition (pinned exchanges opt out of AQE skew-splitting)
       .repartition(graft.util.Parallelism.shuffleWidth(shAll),
-        col("id_a"), pmod(xxhash64(col("id_b")), lit(pairSalt)))
+        col("id_a"), pmod(xxhash64(col("id_b")), lit(Salting.pairSalt)))
     // auto-sized verify-broadcast decision: ~8 bytes per shingle hash
     // plus per-row array/offset overhead — a deliberate overestimate
     // (UnsafeArrayData headers, row pointers), so the hint only fires

@@ -854,10 +854,10 @@ object TextAnalysis {
       // (id_a, id_b)-keyed pin is planned as redundant with the
       // distinct's own exchange and collapsed, so key by id_a SALTED
       // with a bounded hash of id_b: the pin survives and a hub id_a's
-      // verification spreads over 16 partitions instead of one (a
-      // pinned exchange also opts out of AQE skew-splitting).
+      // verification spreads over pairSalt partitions instead of one
+      // (a pinned exchange also opts out of AQE skew-splitting).
       .repartition(shufflePartitions, col("id_a"),
-        pmod(xxhash64(col("id_b")), lit(16)))
+        pmod(xxhash64(col("id_b")), lit(graft.util.Salting.pairSalt)))
     val sideA = docsArr.select(col("__id").as("id_a"),
       col("__arr").as("__aa"), col("__wmax").as("__wma"),
       col("__n2").as("n2_a"))

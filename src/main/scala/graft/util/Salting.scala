@@ -15,6 +15,13 @@ import org.apache.spark.sql.functions._
   */
 object Salting {
 
+  /** Bounded salt width for the pair-verification repartitions
+    * ([[graft.text.Dedup]], [[graft.text.TextAnalysis]]): wide enough to
+    * break a hot id_a across tasks, narrow enough that the (id_a, salt)
+    * key space stays ≫ partition count (guide §2.5's 20-100× rule is
+    * carried by id_a's own cardinality). */
+  val pairSalt = 16
+
   def withSalt(df: DataFrame, salts: Int, out: String = "__salt"): DataFrame =
     df.withColumn(out, pmod(spark_partition_id() + monotonically_increasing_id(), lit(salts)).cast("int"))
 

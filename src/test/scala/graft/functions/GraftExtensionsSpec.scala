@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The SQL surface of every native kernel, installed via
@@ -8,15 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * expressions the Column API uses. */
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  // getOrCreate ignores withExtensions when another suite already built
-  // the shared session, so use the registerAll path (same function table
-  // as GraftExtensions)
+  // the shared test session is built without extensions, so install the
+  // same function table as GraftExtensions through registerAll
   private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val s = graft.TestSpark.spark
     GraftFunctions.registerAll(s)
     s
   }
@@ -50,5 +45,14 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val viaSql = spark.sql(
       "SELECT simhash62(split(trim(text), '\\\\s+')) AS sh FROM t").head().getLong(0)
     assert(viaCol == viaSql)
+  }
+
+  test("char_entropy of the empty string is (0, 0), not a division by zero") {
+    val r = spark.sql(
+      "SELECT char_entropy('') AS e, char_entropy(s) AS f " +
+        "FROM VALUES (''), ('ab') AS t(s) ORDER BY s").collect()
+    assert(r.map(_.getStruct(0)).toSeq == Seq(Row(0L, 0L), Row(0L, 0L)))
+    // two distinct characters: ⌊(⌊ln 2·10⁶⌋·2 − 0) / 2⌋
+    assert(r.map(_.getStruct(1)).toSeq == Seq(Row(0L, 0L), Row(2L, 693147L)))
   }
 }

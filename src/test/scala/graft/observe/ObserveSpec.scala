@@ -16,6 +16,15 @@ class ObserveSpec extends SparkSpec {
     assert(m.gauge("lag_seconds") == 3.0)
   }
 
+  test("histograms fold to count/sum/max: 100k observations leave one constant-size entry") {
+    val m = new MetricsRegistry("cdc")
+    (1 to 100000).foreach(i =>
+      m.observeHistogram("batch_duration_ms", i.toDouble, Map("query" -> "q")))
+    assert(m.histogram("batch_duration_ms", Map("query" -> "q")) ==
+      Some(Histogram(100000L, 5000050000.0, 100000.0)))
+    assert(m.histogram("batch_duration_ms").isEmpty) // other labels, other series
+  }
+
   test("recordReconciliation computes accuracy like the reference (metrics.py:147-151)") {
     val m = new MetricsRegistry()
     m.recordReconciliation("users",
