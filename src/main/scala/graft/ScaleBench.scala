@@ -112,7 +112,8 @@ object ScaleBench {
     ((System.nanoTime() - t0) / 1e9, n)
   }
 
-  /** Drop every persisted/localCheckpoint'd block and nudge the
+  /** Drop every persisted/localCheckpoint'd block outside the live
+    * shared entries ([[util.Materialized.sweep]]) and nudge the
     * ContextCleaner (System.gc() is what lets it reap now-unreferenced
     * checkpoint RDDs and broadcasts). Without this, the factor-1 phase's
     * checkpoint blocks stay pinned in storage memory through the
@@ -121,7 +122,7 @@ object ScaleBench {
     * Only called at points where no benched query still references a
     * checkpoint (after the shingle-index family, between factors). */
   private def releaseStorage(spark: SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    util.Materialized.sweep(spark)
     System.gc()
   }
 

@@ -12,6 +12,7 @@ import graft.multimodal.Multimodal
 import graft.reconcile.Differ
 import graft.repair.Repairer
 import graft.text.{Dedup, Retrieval, TextAnalysis}
+import graft.util.Materialized
 import graft.vector.{Pq, Similarity}
 
 /** Driver contract — every operator from SURVEY.md §2 gets a `queries`
@@ -1893,88 +1894,30 @@ object SparkEntry {
     * lineage-cut (`localCheckpoint`, like [[shingleIdx]]) — q41's frame
     * sampling derives from q40's decode instead of re-decoding (the
     * VERDICT-flagged double-decode). A checkpoint rather than a persist
-    * so the cache's block-manager RDD id is discoverable from the plan
-    * ([[protectedRddIds]]) and the between-query storage sweep can
+    * so [[Materialized.sweep]] can see it is a live shared entry and
     * skip it. */
-  // bounded LRU (weak keys don't work here — the cached DataFrame itself
-  // strongly references its session): at most 4 decodes stay live;
-  // evicted entries release their checkpoint blocks so neither storage
-  // memory nor stopped sessions accumulate beyond the bound
-  private val decodedCache =
-    new java.util.LinkedHashMap[(SparkSession, String), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), DataFrame]): Boolean = {
-        val evict = size() > 4
-        if (evict) try Dedup.releaseIndex(e.getValue)
-        catch { case _: Exception => () }
-        evict
-      }
-    }
   private def decodedAssets(s: SparkSession, d: String): DataFrame =
-    decodedCache.synchronized {
-      val k = (s, d)
-      Option(decodedCache.get(k)).getOrElse {
-        val df = Multimodal.decodeAndFeaturize(
-          Multimodal.syntheticAssets(Tables.documents(s, d))).localCheckpoint()
-        decodedCache.put(k, df)
-        df
-      }
-    }
+    Materialized.shared(s, s"decoded:$d")(Multimodal.decodeAndFeaturize(
+      Multimodal.syntheticAssets(Tables.documents(s, d))).localCheckpoint())
 
-  /** Block-manager RDD ids owned by the LIVE shared caches (the
-    * [[shingleIdx]] family, the [[decodedAssets]] decode cache). A
-    * storage sweep between bench/verify queries must skip exactly
-    * these: a localCheckpoint has no lineage, so unpersisting a live
-    * one breaks every later query that shares it (q36/q46/q48/q87/q98/
-    * q100 share one shingle index; q40/q41/q49/q93/q94 one decode).
-    * Everything else in `getPersistentRDDs` is per-query transient
-    * storage and fair game. */
-  def protectedRddIds: Set[Int] = {
-    import scala.jdk.CollectionConverters._
-    val cached =
-      shingleIdxCache.synchronized { shingleIdxCache.values.asScala.toList } ++
-        decodedCache.synchronized { decodedCache.values.asScala.toList }
-    cached.flatMap(df => df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }).toSet
-  }
-
-  /** Unpersist every block-manager RDD EXCEPT the live shared caches —
-    * the per-query storage sweep (ScaleBench's blanket releaseStorage
-    * with the cache protection added). Query-shaped APIs materialize
-    * internal localCheckpoints the caller cannot release through the
-    * result alone until its action has run (the q90 postings table,
-    * DF-cut shingle tables, the q108 bigram stream, ...); sweeping
-    * between timings keeps a long-lived JVM's storage flat instead of
+  /** Unpersist every block-manager RDD except the live shared entries
+    * (the [[shingleIdx]] family, the [[decodedAssets]] decode) — the
+    * per-query storage sweep. Query-shaped APIs materialize internal
+    * localCheckpoints the caller cannot release through the result
+    * alone until its action has run (the q90 postings table, DF-cut
+    * shingle tables, the q108 bigram stream, ...); sweeping between
+    * timings keeps a long-lived JVM's storage flat instead of
     * accumulating leaked blocks for the life of the session — the
     * measured mechanism behind the round-8 q90 regression. */
-  def sweepTransientStorage(spark: SparkSession, blocking: Boolean = true): Unit = {
-    val keep = protectedRddIds
-    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!keep(id)) rdd.unpersist(blocking = blocking)
-    }
-  }
+  def sweepTransientStorage(spark: SparkSession): Unit = Materialized.sweep(spark)
 
   /** The shared shingle index for the Jaccard family (q36/q46/q48):
     * built + checkpointed once per (session, dir) — in a persistent
-    * pipeline this is a written table. Bounded cache like
-    * [[decodedAssets]]; evicted checkpoints are reclaimed by the
-    * ContextCleaner once unreferenced. */
-  private val shingleIdxCache =
-    new java.util.LinkedHashMap[(SparkSession, String), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), DataFrame]): Boolean =
-        size() > 4
-    }
+    * pipeline this is a written table. A localCheckpoint has no
+    * lineage, so it lives exactly as long as its shared entry. */
   private def shingleIdx(s: SparkSession, d: String): DataFrame =
-    shingleIdxCache.synchronized {
-      val k = (s, d)
-      Option(shingleIdxCache.get(k)).getOrElse {
-        val df = Dedup.shingleIndex(Tables.documents(s, d), "doc_id", "text", k = 3)
-        shingleIdxCache.put(k, df)
-        df
-      }
-    }
+    Materialized.shared(s, s"shingleIdx:$d")(
+      Dedup.shingleIndex(Tables.documents(s, d), "doc_id", "text", k = 3))
 
   /** q70/q71's synthesized multi-line corpus: the raw text, a
     * per-source footer (cross-document boilerplate by construction),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.util.Materialized
+
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
   * Each table is one parquet file per scale-factor directory. At cluster
@@ -23,14 +25,12 @@ object Tables {
   // This memoizes METADATA only — the logical plan leaf — never rows:
   // every action over the returned DataFrame still scans the parquet
   // input. The test corpora are immutable per the driver contract, so a
-  // point-in-time file snapshot is correct; sessions are part of the
-  // key, and the handful of plan leaves a session can pin is bytes.
-  private val resolved =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    resolved.getOrElseUpdate((spark, dir, name),
-      spark.read.parquet(s"$dir/$name.parquet"))
+  // point-in-time file snapshot is correct; the memo is per session and
+  // holds only the most recently used ones (`Materialized.shared`).
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    Materialized.shared(spark, path)(spark.read.parquet(path))
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

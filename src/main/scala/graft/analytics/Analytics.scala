@@ -916,7 +916,7 @@ object Analytics {
           Option(aggs.getString(2 + i * 3)).orNull,
           Option(aggs.getString(3 + i * 3)).orNull)
       }
-    } finally graft.text.Dedup.releaseIndex(base)
+    } finally graft.util.Materialized.release(base)
     spark.createDataFrame(rows).toDF("column", "n_rows", "n_nulls",
       "n_distinct", "min_value", "max_value")
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.text.{Dedup, Retrieval, StreamingNearDedup, TextAnalysis}
+import graft.util.Materialized
 
 /** Corpus curation — the standard LLM training-data preparation funnel
   * as ONE composable pipeline over a documents table:
@@ -193,18 +194,15 @@ object CurateCli {
     * table, not a replacement for the corpus rows). */
   final case class Curated(corpus: DataFrame, funnel: Seq[StageCount],
       packed: Option[DataFrame] = None) {
-    def unpersist(): Unit = {
+    def unpersist(): Unit =
       // stage outputs are lineage-cut via localCheckpoint, so their
       // storage lives behind a LogicalRDD, not the cache manager —
-      // releaseIndex drops those blocks; unpersist stays as a no-op
-      // safety net should a caller persist() on top
-      Dedup.releaseIndex(corpus)
-      corpus.unpersist(blocking = false)
-      packed.foreach { p =>
-        Dedup.releaseIndex(p)
-        p.unpersist(blocking = false)
+      // Materialized.release drops those blocks; unpersist stays as a
+      // no-op safety net should a caller persist() on top
+      (corpus +: packed.toSeq).foreach { df =>
+        Materialized.release(df)
+        df.unpersist(blocking = false)
       }
-    }
   }
 
   private def stageCount(stage: String, df: DataFrame, textCol: String): StageCount = {
@@ -248,7 +246,7 @@ object CurateCli {
       c
     }
     def release(df: DataFrame): Unit = {
-      Dedup.releaseIndex(df)
+      Materialized.release(df)
       live -= df
     }
     // label every stage's jobs (materialize + count) so the Spark UI /
@@ -396,7 +394,7 @@ object CurateCli {
           Dedup.containmentDropIds(sh, cfg.containmentThreshold,
             cfg.containmentMaxDf).select(col("id").as(idCol)),
           Seq(idCol), "left_anti"))
-        Dedup.releaseIndex(sh)
+        Materialized.release(sh)
       }
 
       if (cfg.minNovelty > 0) {
@@ -408,7 +406,7 @@ object CurateCli {
           Dedup.ngramNoveltyFromIndex(sh, idCol)
             .filter(col("novelty") < cfg.minNovelty).select(col(idCol)),
           Seq(idCol), "left_anti"))
-        Dedup.releaseIndex(sh)
+        Materialized.release(sh)
       }
 
       if (cfg.mixRatesPpm.nonEmpty || cfg.mixDefaultPpm < 1000000L)
@@ -498,7 +496,7 @@ object CurateCli {
         val hits = Retrieval.phraseMatchesAny(cur, idCol, textCol,
           cfg.auditPhrases).select(idCol).distinct()
         advance("phrase_audit", cur.join(hits, Seq(idCol), "left_anti"))
-        Dedup.releaseIndex(hits) // the shared quote-postings checkpoint
+        Materialized.release(hits) // the shared quote-postings checkpoint
       }
 
       if (cfg.budgetTokens > 0L) {
@@ -525,8 +523,7 @@ object CurateCli {
       Curated(cur, sheet.toList, packed)
     } catch {
       case t: Throwable =>
-        live.foreach(df =>
-          try Dedup.releaseIndex(df) catch { case _: Exception => () })
+        live.foreach(df => scala.util.Try(Materialized.release(df)))
         throw t
     }
   }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
@@ -141,9 +141,13 @@ object CurateStreamCli {
     // batch-side tables built ONCE before the stream starts and released
     // after the landing drain — maxFilesPerTrigger=1 means one batch per
     // input file, and rebuilding either per file is pure waste
-    var evalCache: Option[org.apache.spark.sql.DataFrame] = None
-    var modelCache: Option[org.apache.spark.sql.DataFrame] = None
-    var pctCache: Option[org.apache.spark.sql.DataFrame] = None
+    val pinned = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = {
+      val p = df.persist()
+      p.count() // materialize before the stream starts
+      pinned += p
+      p
+    }
     val landingWriter =
       if (!usesBatchSink)
         gated.writeStream.format("parquet").option("path", cfg.output)
@@ -156,26 +160,15 @@ object CurateStreamCli {
         // pass), then appends. Source checkpoint still bounds
         // reprocessing; appends are at-least-once on crash-retry, like
         // any foreachBatch sink.
-        val evalShingles = cfg.evalPath.map { evalDir =>
-          val es = graft.text.Dedup.evalShingleSet(
-            spark.read.parquet(evalDir), "text", cfg.curate.decontaminateK)
-            .persist()
-          es.count() // materialize before the stream starts
-          es
-        }
-        evalCache = evalShingles
+        val evalShingles = cfg.evalPath.map(evalDir => pin(graft.text.Dedup.evalShingleSet(
+          spark.read.parquet(evalDir), "text", cfg.curate.decontaminateK)))
         // INGEST-TIME perplexity gate (the stream-side q108/CCNet
         // parity): arriving docs score against a broadcast
         // bigramLmModel SNAPSHOT — a micro-batch is not a corpus, so
         // the reference LM must come from outside the stream. Same gate
         // rule as the batch funnel stage: cross-multiplied integers,
         // bigram-less docs carry no evidence and pass.
-        val model = cfg.bigramModelPath.map { p =>
-          val m = spark.read.parquet(p).persist()
-          m.count()
-          m
-        }
-        modelCache = model
+        val model = cfg.bigramModelPath.map(p => pin(spark.read.parquet(p)))
         // INGEST-TIME per-source percentile quality gate (the
         // stream-side quality_pct parity): a micro-batch cannot rank a
         // doc against the whole corpus, so arriving docs gate against a
@@ -184,15 +177,9 @@ object CurateStreamCli {
         // quality_e6, broadcast. Unknown/null sources carry no
         // calibration and pass (same no-evidence-no-drop rule as the
         // perplexity gate).
-        val pctTable = cfg.qualityPctTablePath.map { p =>
-          val t = spark.read.parquet(p)
-            .select(col("source").as("__src"),
-              col("min_quality_e6").cast("long").as("__minq"))
-            .persist()
-          t.count()
-          t
-        }
-        pctCache = pctTable
+        val pctTable = cfg.qualityPctTablePath.map(p => pin(spark.read.parquet(p)
+          .select(col("source").as("__src"),
+            col("min_quality_e6").cast("long").as("__minq"))))
         gated.writeStream.foreachBatch {
           (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
               _: Long) =>
@@ -248,9 +235,7 @@ object CurateStreamCli {
       if (!usesBatchSink) gated
       else {
         landing.awaitTermination()
-        evalCache.foreach(_.unpersist(blocking = false))
-        modelCache.foreach(_.unpersist(blocking = false))
-        pctCache.foreach(_.unpersist(blocking = false))
+        pinned.foreach(_.unpersist(blocking = false))
         spark.readStream.schema(gated.schema)
           .option("maxFilesPerTrigger", 1).parquet(cfg.output)
       }

@@ -90,9 +90,10 @@ object Bpe {
     * path: a 30k-merge list becomes 600 bounded projections instead of
     * one 30k-deep Catalyst expression tree. Intermediate checkpoints
     * are released as soon as their successor materializes
-    * ([[Dedup.releaseIndex]] — the [[trainMerges]] discipline); the
-    * FINAL batch's checkpoint backs the returned table, so release it
-    * the same way once consumed (or let the ContextCleaner reap it).
+    * ([[graft.util.Materialized.release]] — the [[trainMerges]]
+    * discipline); the FINAL batch's checkpoint backs the returned
+    * table, so release it the same way once consumed (or let the
+    * ContextCleaner reap it).
     * Lists of ≤ `batchSize` merges stay a pure column fold — no
     * materialization, identical plan to [[applyMerges]]. */
   def applyMergesTable(words: DataFrame, symsCol: String,
@@ -107,7 +108,7 @@ object Bpe {
         .localCheckpoint()
       // release the PREVIOUS batch's checkpoint only — never the
       // caller-owned input table (i == 0)
-      if (i > 0) Dedup.releaseIndex(cur)
+      if (i > 0) graft.util.Materialized.release(cur)
       next
     }
   }
@@ -137,9 +138,9 @@ object Bpe {
         words = words.withColumn("syms", applyMerge(col("syms"), a, b))
           .localCheckpoint()
         // localCheckpoint storage lives on the underlying RDD —
-        // Dataset.unpersist would be a no-op (the Dedup.releaseIndex
-        // rationale); without this, N merge rounds pin N word tables
-        Dedup.releaseIndex(prev)
+        // Dataset.unpersist would be a no-op, so release the RDD behind
+        // the plan; without this, N merge rounds pin N word tables
+        graft.util.Materialized.release(prev)
       }
     }
     (merges.toList, words)

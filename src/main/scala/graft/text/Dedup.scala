@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.util.Salting
+import graft.util.{Materialized, Salting}
 
 /** Deduplication operators over a documents table — the four standard
   * training-corpus techniques, each designed around ONE shuffle on a
@@ -193,6 +193,9 @@ object Dedup {
       // over Salting.pairSalt partitions instead of concentrating its
       // verification in one (a pinned REPARTITION_BY_NUM also opts out
       // of AQE skew-splitting, so the salt is the only skew valve here)
+      // The salt spreads hub verification only while the verify legs
+      // plan as broadcast joins: a sort-merge leg needs clustering on
+      // id_a alone, so it adds an exchange on top of this one.
       .repartition(parts, col("id_a"), pmod(xxhash64(col("id_b")), lit(Salting.pairSalt)))
   }
 
@@ -702,7 +705,7 @@ object Dedup {
     * copy — [[containmentDropIds]] applied as one anti join. Same
     * storage discipline as the other from-scratch pair APIs: the
     * internal [[shingleIndex]] checkpoint rides the result plan —
-    * release via [[releaseIndex]] after the terminal action. */
+    * release via [[Materialized.release]] after the terminal action. */
   def dedupByContainment(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, threshold: Double = 0.8,
       maxShingleDf: Long = 20L): DataFrame = {
@@ -835,6 +838,9 @@ object Dedup {
       // id_b ([[Salting.pairSalt]]): the pin survives AND a hub id_a's
       // per-pair array_intersect work spreads instead of landing in one
       // partition (pinned exchanges opt out of AQE skew-splitting)
+      // The salt spreads hub verification only while the verify legs
+      // plan as broadcast joins: a sort-merge leg needs clustering on
+      // id_a alone, so it adds an exchange on top of this one.
       .repartition(graft.util.Parallelism.shuffleWidth(shAll),
         col("id_a"), pmod(xxhash64(col("id_b")), lit(Salting.pairSalt)))
     // auto-sized verify-broadcast decision: ~8 bytes per shingle hash
@@ -883,7 +889,7 @@ object Dedup {
     * Verification is candidate-sized `array_intersect` on per-doc
     * distinct shingle-hash arrays computed on the scan. The profile
     * materializes once (`localCheckpoint`, read by the bucket count,
-    * both band legs); [[releaseIndex]] the result when consumed. */
+    * both band legs); [[Materialized.release]] the result when consumed. */
   def sortedNeighborhoodPairs(df: DataFrame, idCol: String, textCol: String,
       window: Int, threshold: Double, k: Int = 3): DataFrame = {
     require(window >= 1, s"window must be >= 1, got $window")
@@ -1180,7 +1186,7 @@ object Dedup {
       textCol, k, minHits, broadcastConfirm)
     // safe to release NOW: the confirm/dirty derivation inside is
     // materialized eagerly, so the returned plan no longer reads histSh
-    releaseIndex(histSh)
+    Materialized.release(histSh)
     out
   }
 
@@ -1236,24 +1242,9 @@ object Dedup {
       // storage until the ContextCleaner happens to reap the
       // unreferenced RDDs
       .localCheckpoint()
-    releaseIndex(cand)
+    Materialized.release(cand)
     newDf.join(dirty, Seq(idCol), "left_anti")
   }
-
-  /** Drop the block-manager storage behind a `localCheckpoint`'ed
-    * DataFrame (an in-memory [[shingleIndex]]/[[minhashIndex]], the
-    * history-dedup candidate set, ...) once nothing downstream can
-    * re-read it — the targeted counterpart of ScaleBench's blanket
-    * `getPersistentRDDs` sweep (safe to call concurrently with other
-    * pipelines: it touches only this plan's own checkpoint RDD). No-op
-    * on plans with no checkpointed RDD behind them (e.g. a
-    * written-parquet index). */
-  def releaseIndex(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   // ---- duplicated-span detection (exact substring dedup) ---------------
 

@@ -135,8 +135,8 @@ object Retrieval {
     * internal `localCheckpoint` whose blocks the API cannot release
     * itself: they must outlive the caller's terminal action. The
     * result plan carries the checkpoint as a `LogicalRDD` leaf, so
-    * after consuming the result call [[Dedup.releaseIndex]] on it (or
-    * sweep the session with `getPersistentRDDs` unpersist, as the
+    * after consuming the result call [[graft.util.Materialized.release]]
+    * on it (or [[graft.util.Materialized.sweep]] the session, as the
     * bench does between timings); a long-lived JVM that skips this
     * accumulates one scored-postings copy per invocation. (The raw
     * postings checkpoint that feeds the df/dl rollups is released
@@ -180,7 +180,7 @@ object Retrieval {
     // the raw postings blocks fed the rollups and the scored table —
     // nothing in the RESULT plan references them anymore, so release
     // now instead of making the caller hold two checkpoints
-    Dedup.releaseIndex(postings)
+    graft.util.Materialized.release(postings)
     val scoredTerms = scoredPostings.join(qTerms, "token")
       .select(col("__qid"), col("doc_id"), col("__s"))
     val w = org.apache.spark.sql.expressions.Window

@@ -856,6 +856,9 @@ object TextAnalysis {
       // with a bounded hash of id_b: the pin survives and a hub id_a's
       // verification spreads over pairSalt partitions instead of one
       // (a pinned exchange also opts out of AQE skew-splitting).
+      // The salt spreads hub verification only while the verify legs
+      // plan as broadcast joins: a sort-merge leg needs clustering on
+      // id_a alone, so it adds an exchange on top of this one.
       .repartition(shufflePartitions, col("id_a"),
         pmod(xxhash64(col("id_b")), lit(graft.util.Salting.pairSalt)))
     val sideA = docsArr.select(col("__id").as("id_a"),

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.text.{Dedup, Retrieval}
+import graft.text.Retrieval
+import graft.util.Materialized
 
 /** Storage hygiene for long-lived JVMs (the round-8 q90 mechanism):
   * query-shaped APIs that materialize internal localCheckpoints must be
@@ -25,9 +26,9 @@ class StorageHygieneSpec extends SparkSpec {
       assert(r.count() > 0)
       // the result plan carries the postings checkpoint as a LogicalRDD
       // leaf — the documented release path
-      Dedup.releaseIndex(r)
+      Materialized.release(r)
       assert(persistentIds == baseline,
-        "postings checkpoint leaked past releaseIndex")
+        "postings checkpoint leaked past Materialized.release")
     }
   }
 
@@ -36,7 +37,7 @@ class StorageHygieneSpec extends SparkSpec {
     // build the shared index by running a query of its family
     val q36 = SparkEntry.queries("q36_ngram_jaccard_pairs")(spark, sf)
     val before = q36.count()
-    val protectedIds = SparkEntry.protectedRddIds
+    val protectedIds = Materialized.liveRddIds
     assert(protectedIds.nonEmpty, "shared shingle index should be live")
     // leak a transient checkpoint the way a query API would
     val leaked = Tables.documents(spark, sf).select("doc_id").localCheckpoint()
@@ -55,5 +56,41 @@ class StorageHygieneSpec extends SparkSpec {
     assert(q98.count() >= 0)
     assert(SparkEntry.queries("q36_ngram_jaccard_pairs")(spark, sf).count()
       == before)
+  }
+
+  test("long-lived JVM: six sessions hold at most four, evicted checkpoints are released, sweep keeps only live entries") {
+    SparkEntry.sweepTransientStorage(spark)
+    val baseline = persistentIds -- Materialized.liveRddIds
+    val fresh = (1 to 6).map(_ => spark.newSession())
+    try {
+      // per session: the checkpoint RDD ids its shared entries own, and
+      // the query results, kept referenced so that only an explicit
+      // release (not the ContextCleaner) can free evicted checkpoints
+      val (owned, results) = fresh.map { s =>
+        val before = Materialized.liveRddIds
+        val q36 = SparkEntry.queries("q36_ngram_jaccard_pairs")(s, sf)
+        val q41 = SparkEntry.queries("q41_frame_samples")(s, sf)
+        assert(q36.count() >= 0 && q41.count() > 0)
+        assert(Tables.lineitem(s, sf).count() > 0)
+        assert(Materialized.sessions.size <= Materialized.MaxSessions)
+        val ids = Materialized.liveRddIds -- before
+        assert(ids.nonEmpty, "q36's index and q41's decode should be shared entries")
+        (ids, Seq(q36, q41))
+      }.unzip
+      assert(Materialized.sessions == fresh.takeRight(Materialized.MaxSessions))
+      assert(owned.take(2).flatten.toSet.intersect(persistentIds).isEmpty,
+        "an evicted session's checkpoints are still persistent")
+      java.lang.ref.Reference.reachabilityFence(results)
+      // a transient checkpoint next to the live entries
+      val leaked = Tables.documents(fresh.last, sf).select("doc_id").localCheckpoint()
+      assert(leaked.count() > 0)
+      SparkEntry.sweepTransientStorage(spark)
+      assert(persistentIds == baseline ++ Materialized.liveRddIds)
+      assert(owned.drop(2).flatten.toSet.subsetOf(persistentIds))
+    } finally {
+      // later suites find their session the most recently used again
+      Tables.documents(spark, sf)
+      assert(Materialized.sessions.last eq spark)
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.SparkSpec
+import graft.util.Materialized
 
 class BigramLmSpec extends SparkSpec {
   import spark.implicits._
@@ -39,7 +40,7 @@ class BigramLmSpec extends SparkSpec {
     val against = TextAnalysis
       .bigramLmScoresAgainstModel(docs, "doc_id", "text", model)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    Dedup.releaseIndex(model) // the builder's internal bigram checkpoint
+    Materialized.release(model) // the builder's internal bigram checkpoint
     assert(against == self)
   }
 
@@ -52,7 +53,7 @@ class BigramLmSpec extends SparkSpec {
       Seq((10L, "a b"), (11L, "b c"), (12L, "z q")).toDF("doc_id", "text"),
       "doc_id", "text", model)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    Dedup.releaseIndex(model)
+    Materialized.release(model)
     def lfp(n: Long): Long = math.floor(math.log(n.toDouble) * 1e6).toLong
     assert(got == Map(
       10L -> (lfp(3) - lfp(2)), // seen pair:      L(c1+V) − L(c12+1)

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.util.Materialized
 
 /** BPE training model-checked against an independent in-memory
   * reference implementation (the Sennrich get_stats/merge loop). */
@@ -118,7 +119,7 @@ class BpeSpec extends SparkSpec {
     assert(batched.queryExecution.optimizedPlan.collect {
       case _: org.apache.spark.sql.execution.LogicalRDD => 1 }.nonEmpty,
       "batched apply must cut lineage via localCheckpoint")
-    graft.text.Dedup.releaseIndex(batched)
+    Materialized.release(batched)
     // ≤ one batch falls back to the pure column fold — no checkpoint
     val small = Bpe.applyMergesTable(words, "syms", merges, batchSize = 50)
     assert(small.queryExecution.optimizedPlan.collect {

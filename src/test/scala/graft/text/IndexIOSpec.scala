@@ -3,6 +3,7 @@ package graft.text
 import java.nio.file.Files
 
 import graft.{SparkSpec, Tables}
+import graft.util.Materialized
 import org.apache.spark.sql.functions._
 
 /** Durable (written-parquet) index materialization must be a drop-in
@@ -30,7 +31,7 @@ class IndexIOSpec extends SparkSpec {
     val pb = Dedup.ngramJaccardPairsFromIndex(written, threshold = 0.5)
       .as[(Long, Long, Double)].collect().toSet
     assert(pa == pb && pa.nonEmpty, s"pairs diverged: ${pa.size} vs ${pb.size}")
-    Dedup.releaseIndex(ck)
+    Materialized.release(ck)
   }
 
   test("shingleLookup on a written index prunes shard partitions") {
@@ -69,7 +70,7 @@ class IndexIOSpec extends SparkSpec {
       .as[(Long, Seq[Long])].collect().map { case (i, s) => (i, s.toList) }.toSet
     assert(probed.as[(Long, Seq[Long])].collect()
       .map { case (i, s) => (i, s.toList) }.toSet == expect && expect.nonEmpty)
-    Dedup.releaseIndex(ck)
+    Materialized.release(ck)
   }
 
   test("funnel with indexDir: same survivors as localCheckpoint, artifact persists") {

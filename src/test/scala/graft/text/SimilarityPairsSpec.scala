@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.SparkSpec
+import graft.util.Materialized
 import org.apache.spark.sql.functions._
 
 /** The round-8 pair-similarity family: directed containment (excerpt
@@ -58,7 +59,7 @@ class SimilarityPairsSpec extends SparkSpec {
     val out = Dedup.dedupByContainment(docs, "doc_id", "text",
       k = 3, threshold = 0.9, maxShingleDf = 0)
     val kept = out.select("doc_id").as[Long].collect().toSet
-    Dedup.releaseIndex(out) // the documented internal-index release path
+    Materialized.release(out) // the documented internal-index release path
     // mutual equal-size containment keeps exactly the smaller id
     assert(kept == Set(1L, 3L, 5L))
   }

@@ -60,4 +60,14 @@ class SessionsSpec extends AnyFunSuite {
     val sub = """extends\s+(org\.apache\.spark\.sql\.streaming\.)?StreamingQueryListener\b""".r
     assert(filesMatching("src/main/scala", sub) == Set("Metrics.scala"))
   }
+
+  test("structure: Materialized is the one owner of Spark storage") {
+    for (name <- Seq("getPersistentRDDs", "removeEldestEntry"))
+      assert(filesMatching("src/main/scala", name.r) == Set("Materialized.scala"), name)
+    // a Map keyed by a session (or by a tuple led by one)
+    val sessionKeyed = """Map(\.empty)?\s*\[\s*\(?\s*SparkSession\b""".r
+    assert(filesMatching("src/main/scala", sessionKeyed) == Set("Materialized.scala"))
+    // split so this file does not match itself
+    assert(filesMatching("src", ("release" + "Index").r).isEmpty)
+  }
 }
