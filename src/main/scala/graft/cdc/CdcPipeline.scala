@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import scala.util.control.NonFatal
 
 /** The CDC replication path as one Structured Streaming job (reference
   * pipeline: SURVEY §3.1; Kafka-Connect original at
@@ -16,6 +17,16 @@ import org.apache.spark.sql.types.StructType
   *     → watermark on commit time, late rows quarantined         (ST4)
   *     → foreachBatch: collapse latest-per-key + idempotent
   *       monotonic MERGE into the per-table warehouse            (W1, ST1/2/7/8)
+  *
+  * The merge stream parses each micro-batch once: the merge persists its
+  * input for the batch's lifetime ([[graft.util.Materialized.scoped]])
+  * and answers all its pre-merge questions (high-water mark, late rows,
+  * tables touched) with one aggregate. The merge runs several Spark
+  * actions per batch, and without the persist each one re-reads the
+  * source and re-runs `from_json` over every envelope — which also
+  * inflates the query's `numInputRows` (`records_replicated_total`) by
+  * the same factor. (The DLQ stream is a separate query with its own
+  * checkpoint and its own parse.)
   *
   * Exactly-once into a non-transactional sink (SURVEY §7.4.1): Structured
   * Streaming checkpoints offsets (ST3); the merge is idempotent (PK-keyed)
@@ -134,14 +145,15 @@ final class CdcPipeline(
 
   /** ST5: retry with exponential backoff around the merge body — the
     * stream restarts from checkpoint on final failure, so the merge's
-    * idempotence makes retries safe. */
+    * idempotence makes retries safe. Only non-fatal failures retry: an
+    * interrupt (the query being stopped) or a VM error propagates at once. */
   private[cdc] def withRetry[T](what: String)(body: => T): T = {
     var attempt = 0
     var lastErr: Throwable = null
     while (attempt <= maxMergeRetries) {
       try return body
       catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           lastErr = e
           attempt += 1
           if (attempt <= maxMergeRetries)
@@ -182,19 +194,23 @@ final class CdcPipeline(
   /** The per-micro-batch merge body (ST1/ST2/ST7/ST8). Public so batch
     * backfills (S2 snapshot mode) reuse the same path.
     *
+    * `batch` is persisted once, outside the retry loop, so a retried
+    * merge reuses the parsed rows; one aggregate job then yields the
+    * batch's max commit ts, its late-row count and the set of tables
+    * its current rows touch (it also fills the cache). The `_late`
+    * write runs only when that count is above 0.
+    *
     * ST4 late-row quarantine: rows whose commit timestamp lags the
     * batch's high-water mark by more than `watermarkDelay` append to
     * `warehouseDir/_late` INSTEAD of merging — the reference's 24 h
     * CDC-TTL staleness bound, with quarantine rather than silent
     * application (spec.md:134 FR-015). */
-  def mergeMicroBatch(batch: DataFrame, batchId: Long): Unit = withRetry(s"merge batch $batchId") {
-    // (no early `return` here: NonLocalReturnControl would be caught by
-    // the retry wrapper and misread as a failure)
-    val bounds =
-      if (batch.isEmpty) null
-      else batch.agg(max(col(ordCol))).head()
-    val batchMax = if (bounds == null || bounds.isNullAt(0)) None
-      else Some(bounds.getLong(0))
+  def mergeMicroBatch(batch: DataFrame, batchId: Long): Unit =
+    graft.util.Materialized.scoped(batch) { rows =>
+      withRetry(s"merge batch $batchId")(mergeRows(rows, batchId))
+    }
+
+  private def mergeRows(batch: DataFrame, batchId: Long): Unit = {
     // lateness is judged against the PRE-batch high-water mark; rows with
     // a NULL commit ts are unprocessable by an ordering-based merge and
     // quarantine too (they'd otherwise vanish in the comparisons)
@@ -204,15 +220,19 @@ final class CdcPipeline(
         col(ordCol).isNull || col(ordCol) < lit(hwm - latenessMicros)
       case None => col(ordCol).isNull
     }
-    val current = batch.filter(!coalesce(lateCond, lit(true)))
-    val late = batch.filter(coalesce(lateCond, lit(true)))
-    if (!late.isEmpty)
+    val isLate = coalesce(lateCond, lit(true))
+    val probe = batch.agg(
+      max(col(ordCol)),
+      count(when(isLate, 1)),
+      collect_set(when(!isLate, col("__table")))).head()
+    val batchMax = if (probe.isNullAt(0)) None else Some(probe.getLong(0))
+    if (probe.getLong(1) > 0)
       // one directory per batch id, overwritten on retry/replay — the
       // quarantine write stays idempotent under at-least-once delivery
-      late.write.mode("overwrite").parquet(s"$warehouseDir/_late/batch_$batchId")
-    val tables =
-      if (current.isEmpty) Array.empty[String]
-      else current.select("__table").distinct().collect().map(_.getString(0))
+      batch.filter(isLate).write.mode("overwrite")
+        .parquet(s"$warehouseDir/_late/batch_$batchId")
+    val current = batch.filter(!isLate)
+    val tables = probe.getSeq[String](2)
     tables.foreach { table =>
       keysByTable.get(table).foreach { keys =>
         val updates = current.filter(col("__table") === table).drop("__table")

@@ -143,9 +143,8 @@ object ReconcileCli {
     // persisted: consumed by the plan print, the count, and (in execute
     // mode) one job per priority phase — without this the discrepancy
     // join + SQL generation would recompute ~6x
-    val actions = Repairer.generateRepairActions(disc, schemaName, tableName,
-      cfg.keys, dataCols, dryRun = !cfg.execute).persist()
-    try {
+    graft.util.Materialized.scoped(Repairer.generateRepairActions(disc,
+        schemaName, tableName, cfg.keys, dataCols, dryRun = !cfg.execute)) { actions =>
       val plan = actions.orderBy(col("priority"), col("target_key"))
         .limit(cfg.maxPrint).collect()
       plan.foreach(r => println(s"-- [${r.getString(1)}] ${r.getString(3)}"))
@@ -163,7 +162,7 @@ object ReconcileCli {
           "dry_run" -> true, "printed" -> plan.length)))
         1
       }
-    } finally actions.unpersist()
+    }
   }
 
   private def jsonLine(m: Map[String, Any]): String =

@@ -16,6 +16,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   *   `localCheckpoint` leaves once nothing downstream re-reads them.
   * - [[sweep]]: unpersist every persistent RDD except those behind live
   *   shared entries — the between-query reset of a long-lived JVM.
+  * - [[scoped]]: persist an input for the length of one block that reads
+  *   it more than once, and release it on every exit path.
   */
 object Materialized {
 
@@ -54,6 +56,14 @@ object Materialized {
     * written-parquet index); touches only this plan's own RDDs, so it is
     * safe next to other running pipelines. */
   def release(df: DataFrame): Unit = checkpoints(df).foreach(_.unpersist(blocking = false))
+
+  /** Run `body` on `df` persisted, so every action in it reads the rows
+    * computed by the first one instead of recomputing `df`'s plan, then
+    * unpersist (blocking) whether `body` returns or throws. */
+  def scoped[T](df: DataFrame)(body: DataFrame => T): T = {
+    df.persist()
+    try body(df) finally df.unpersist(blocking = true)
+  }
 
   def sweep(spark: SparkSession): Unit = {
     val keep = liveRddIds

@@ -121,6 +121,18 @@ class CdcPipelineSpec extends SparkSpec {
       e.getCause.getMessage == "still down")
   }
 
+  test("ST5 withRetry: an interrupt is not retried and propagates at once") {
+    val pipeline = new CdcPipeline(spark, tmpDir(), tmpDir(),
+      Map("t" -> Seq("id")), maxMergeRetries = 3, retryBaseBackoffMs = 1)
+    var calls = 0
+    intercept[InterruptedException] {
+      pipeline.withRetry("stopped merge") {
+        calls += 1; throw new InterruptedException("query stopped")
+      }
+    }
+    assert(calls == 1)
+  }
+
   test("S1 kafka option mapping: offsets, pattern, backpressure knob") {
     val pipeline = new CdcPipeline(spark, tmpDir(), tmpDir(),
       Map("t" -> Seq("id")))
@@ -451,5 +463,96 @@ class CdcPipelineSpec extends SparkSpec {
       .as[(Long, String)].collect().toMap
     assert(got == Map(6L -> "none", 1L -> "active", 2L -> "inactive",
       3L -> "active", 4L -> "active", 5L -> "__deleted"))
+  }
+
+  test("one materialization per merge: each batch row is computed once on " +
+      "both warehouse layouts, late rows quarantine, and the storage is " +
+      "released after a merge that succeeds and after one that fails") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.storage.StorageLevel
+    def persistentRdds() = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val schema = StructType(Seq(StructField("__table", StringType),
+      StructField("user_id", StringType), StructField("username", StringType),
+      StructField("status", StringType), StructField("commit_timestamp", LongType),
+      StructField("__deleted", StringType)))
+    def frame(rows: Seq[Row]) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    // high-water mark 5 s, delay 1 s: rows older than 4 s (or with no ts) are late
+    val hwm = 5000000L
+    val base = Seq(
+      Row("users", "u2", "bob", "active", 4500000L, "false"),
+      Row("users", "u3", "carol", "active", 4500000L, "false"))
+    val rows = Seq(
+      Row("users", "u1", "alice", "active", 5000001L, "false"),
+      Row("users", "u2", null, "banned", 5000002L, "false"), // partial update
+      Row("users", "u3", null, null, 5000003L, "true"),      // delete
+      Row("users", "u1", "alice2", null, 5000004L, "false"), // partial update
+      Row("users", "u4", "dan", "active", 1000L, "false"),   // late
+      Row("users", "u5", "eve", "active", null, "false"))    // no ts: late
+    val reads = spark.sparkContext.longAccumulator("batch rows computed")
+    val counted = udf((id: String) => { reads.add(1); id }).asNondeterministic()
+    def batch() = frame(rows).withColumn("user_id", counted(col("user_id")))
+
+    for (buckets <- Seq(0, 4)) {
+      val wh = tmpDir(); val cp = tmpDir()
+      Files.writeString(java.nio.file.Paths.get(s"$cp/_hwm"), hwm.toString)
+      val pipeline = new CdcPipeline(spark, wh, cp, Map("users" -> Seq("user_id")),
+        watermarkDelay = "1 second", warehouseBuckets = buckets)
+      pipeline.mergeMicroBatch(frame(base), 0L)
+      val before = persistentRdds()
+      reads.reset()
+      val ok = batch()
+      pipeline.mergeMicroBatch(ok, 1L)
+      assert(reads.value == rows.size, s"buckets=$buckets: batch rows computed")
+      assert(pipeline.readTable("users").get
+        .select("user_id", "username", "status").as[(String, String, String)]
+        .collect().toSet == Set(("u1", "alice2", "active"), ("u2", "bob", "banned")),
+        s"buckets=$buckets warehouse")
+      assert(spark.read.parquet(s"$wh/_late/batch_1").select("user_id")
+        .as[String].collect().toSet == Set("u4", "u5"), s"buckets=$buckets _late")
+      // no persistent RDD left behind, and no cache-manager entry for the batch
+      assert(persistentRdds() == before, s"buckets=$buckets: RDDs after a merge")
+      assert(ok.storageLevel == StorageLevel.NONE, s"buckets=$buckets: cache entry")
+
+      // a merge that fails every attempt (no such key column): the retry
+      // reuses the materialized rows, and the storage is still released
+      val broken = new CdcPipeline(spark, tmpDir(), cp, Map("users" -> Seq("no_such_key")),
+        watermarkDelay = "1 second", maxMergeRetries = 1, retryBaseBackoffMs = 1,
+        warehouseBuckets = buckets)
+      reads.reset()
+      val failing = batch()
+      val e = intercept[RuntimeException](broken.mergeMicroBatch(failing, 2L))
+      assert(e.getMessage.contains("merge batch 2 failed after 1 retries"))
+      assert(reads.value == rows.size, s"buckets=$buckets: rows computed across retries")
+      assert(persistentRdds() == before, s"buckets=$buckets: RDDs after a failed merge")
+      assert(failing.storageLevel == StorageLevel.NONE,
+        s"buckets=$buckets: cache entry after a failed merge")
+    }
+  }
+
+  test("ST10 records_replicated_total counts each envelope once: the merge " +
+      "query's input rows equal the envelope lines") {
+    val lines = (1 to 40).map(i => ev("INSERT", 1000L + i, s"u${i % 7}", s"n$i", "active")) ++
+      Seq("""{"topic":"heartbeat.scylla","operation":"INSERT","commit_timestamp":1}""",
+        "this is not json at all")
+    val in = jsonEvents(lines)
+    val pipeline = new CdcPipeline(spark, tmpDir(), tmpDir(), Map("users" -> Seq("user_id")),
+      warehouseBuckets = 4)
+    val listener = new graft.observe.CdcQueryListener()
+    spark.streams.addListener(listener)
+    try {
+      val raw = spark.readStream
+        .schema(StructType(Seq(StructField("value", StringType)))).text(in).toDF("value")
+      val q = pipeline.start(raw, envSchema, Trigger.AvailableNow())
+      q.awaitTermination(60000)
+      spark.streams.active.foreach(_.awaitTermination(60000))
+      listener.settle()
+      assert(listener.registry.counter("records_replicated_total",
+        Map("query" -> q.id.toString)) == lines.size)
+      // batchRows holds both queries' batches: the DLQ query reads every
+      // line once too
+      assert(listener.batchRows.map(_._3).sum == 2L * lines.size)
+      assert(pipeline.readTable("users").get.count() == 7)
+    } finally spark.streams.removeListener(listener)
   }
 }

@@ -69,5 +69,9 @@ class SessionsSpec extends AnyFunSuite {
     assert(filesMatching("src/main/scala", sessionKeyed) == Set("Materialized.scala"))
     // split so this file does not match itself
     assert(filesMatching("src", ("release" + "Index").r).isEmpty)
+    // Materialized.scoped persists for one block; CurateStreamCli's `pin`
+    // holds its batch-side tables for the stream's lifetime
+    assert(filesMatching("src/main/scala", """\.persist\(""".r) ==
+      Set("Materialized.scala", "CurateStreamCli.scala"))
   }
 }
