@@ -12,26 +12,28 @@ import scala.util.control.NonFatal
   * `docker/kafka-connect/connectors/` JSON configs).
   *
   *   readStream (JSON-envelope source)
-  *     → parse PERMISSIVE, corrupt records split to DLQ          (ST6)
-  *     → SMT chain: heartbeat-drop, route, unwrap, rename, meta  (T1–T8)
-  *     → watermark on commit time, late rows quarantined         (ST4)
-  *     → foreachBatch: collapse latest-per-key + idempotent
-  *       monotonic MERGE into the per-table warehouse            (W1, ST1/2/7/8)
+  *     → parse PERMISSIVE, keeping `_corrupt_record`            (S8)
+  *     → foreachBatch, the batch persisted once:
+  *         corrupt rows → `_dlq/batch_id=<id>`                    (ST6)
+  *         good rows → SMT chain: heartbeat-drop, route, unwrap  (T1–T8)
+  *           → late rows (behind the `_hwm` high-water mark)
+  *             quarantined to `_late/batch_<id>`                 (ST4)
+  *           → collapse latest-per-key + idempotent monotonic
+  *             MERGE into the per-table warehouse                (W1, ST1/2/7/8)
   *
-  * The merge stream parses each micro-batch once: the merge persists its
-  * input for the batch's lifetime ([[graft.util.Materialized.scoped]])
-  * and answers all its pre-merge questions (high-water mark, late rows,
-  * tables touched) with one aggregate. The merge runs several Spark
-  * actions per batch, and without the persist each one re-reads the
-  * source and re-runs `from_json` over every envelope — which also
-  * inflates the query's `numInputRows` (`records_replicated_total`) by
-  * the same factor. (The DLQ stream is a separate query with its own
-  * checkpoint and its own parse.)
+  * One query, one checkpoint (`$checkpointDir/merge`), one parse: the
+  * batch body persists the parsed rows for the batch's lifetime
+  * ([[graft.util.Materialized.scoped]]), so the dead-letter write, the
+  * merge's one probe aggregate (high-water mark, late rows, tables
+  * touched) and its writes all read them without re-running `from_json`,
+  * and the query's `numInputRows` (`records_replicated_total`) counts
+  * each envelope once.
   *
   * Exactly-once into a non-transactional sink (SURVEY §7.4.1): Structured
   * Streaming checkpoints offsets (ST3); the merge is idempotent (PK-keyed)
-  * and monotonic (commit-ts guard), so at-least-once redelivery of a batch
-  * converges to the same snapshot.
+  * and monotonic (commit-ts guard), and the `_dlq` / `_late` writes
+  * overwrite one directory per batch id, so at-least-once redelivery of
+  * a batch converges to the same snapshot.
   *
   * The warehouse here is parquet-snapshot-per-table (local testbed). On a
   * cluster the identical collapse+merge plan targets Delta/Iceberg
@@ -56,29 +58,6 @@ final class CdcPipeline(
       * at-scale layout. 0 keeps the single-snapshot path (simplest for
       * small tables). */
     warehouseBuckets: Int = 0) {
-
-  /** Parse a raw JSON-line envelope stream with a DLQ split: rows that
-    * fail schema parse land in `dlq` with error context
-    * (data-model.md:173-208); good rows continue. PERMISSIVE mode keeps
-    * the corrupt payload in `_corrupt_record`. */
-  def parseWithDlq(raw: DataFrame, schema: StructType): (DataFrame, DataFrame) = {
-    val withCorrupt = schema.add("_corrupt_record", "string")
-    val parsed = raw.select(
-      from_json(col("value"), withCorrupt, Map("mode" -> "PERMISSIVE",
-        "columnNameOfCorruptRecord" -> "_corrupt_record")).as("r"))
-      .select("r.*")
-    val good = parsed.filter(col("_corrupt_record").isNull).drop("_corrupt_record")
-    val dlq = parsed.filter(col("_corrupt_record").isNotNull)
-      .select(
-        col("_corrupt_record").as("original_payload"),
-        lit("ParseError").as("error_class"),
-        lit("malformed change-event JSON").as("error_message"),
-        current_timestamp().as("failed_at"),
-        lit(0).as("retry_count"),
-        lit(null).cast("string").as("source_topic"),
-        lit(null).cast("string").as("correlation_id"))
-    (good, dlq)
-  }
 
   def tablePath(table: String): String = s"$warehouseDir/$table"
 
@@ -210,6 +189,37 @@ final class CdcPipeline(
       withRetry(s"merge batch $batchId")(mergeRows(rows, batchId))
     }
 
+  /** ST6 dead-letter records (data-model.md:173-208) of a parsed batch's
+    * corrupt rows. */
+  private def deadLetters(parsed: DataFrame): DataFrame =
+    parsed.filter(col("_corrupt_record").isNotNull).select(
+      col("_corrupt_record").as("original_payload"),
+      lit("ParseError").as("error_class"),
+      lit("malformed change-event JSON").as("error_message"),
+      current_timestamp().as("failed_at"),
+      lit(0).as("retry_count"),
+      lit(null).cast("string").as("source_topic"),
+      lit(null).cast("string").as("correlation_id"))
+
+  /** The stream's batch body: the parsed batch is persisted once; its
+    * dead letters overwrite `warehouseDir/_dlq/batch_id=<id>` (a replayed
+    * batch rewrites the same rows; a batch without any leaves a
+    * schema-only file, so `_dlq` always reads as one table), and its
+    * good rows go through the SMT chain — heartbeat drop (T5), topic →
+    * `__table` routing (T4), delete marker (T1) — into [[mergeRows]].
+    * The split comes first: a corrupt row's NULL `topic` would make the
+    * heartbeat filter drop it. */
+  private def replicateBatch(parsed: DataFrame, batchId: Long): Unit =
+    graft.util.Materialized.scoped(parsed) { rows =>
+      deadLetters(rows).write.mode("overwrite")
+        .parquet(s"$warehouseDir/_dlq/batch_id=$batchId")
+      val good = rows.filter(col("_corrupt_record").isNull).drop("_corrupt_record")
+      val transformed = Transforms.routeTable(Transforms.dropHeartbeats(good, "topic"), "topic")
+        .withColumn(deleteCol, (col("operation") === ChangeEvent.Delete).cast("string"))
+        .drop("topic", "operation")
+      withRetry(s"merge batch $batchId")(mergeRows(transformed, batchId))
+    }
+
   private def mergeRows(batch: DataFrame, batchId: Long): Unit = {
     // lateness is judged against the PRE-batch high-water mark; rows with
     // a NULL commit ts are unprocessable by an ordering-based merge and
@@ -276,38 +286,36 @@ final class CdcPipeline(
       case Right(_) => ()
     }
 
-  /** Wire the full streaming pipeline onto a raw JSON-line stream.
-    * Returns the started query; DLQ rows append to `warehouseDir/_dlq`.
-    * When `schemaGate` is given, the envelope's Avro schema must pass
-    * the registry compat check first. */
+  /** Wire the full streaming pipeline onto a raw JSON-line stream and
+    * return the one query it starts (checkpoint `$checkpointDir/merge`);
+    * dead letters land in `warehouseDir/_dlq/batch_id=<id>`. When
+    * `schemaGate` is given, the envelope's Avro schema must pass the
+    * registry compat check first.
+    *
+    * Upgrading a checkpoint from the two-query layout: the `merge`
+    * offsets stay valid (same source), and the old `$checkpointDir/_dlq`
+    * is orphaned. A `_dlq` written by the old streaming file sink is
+    * rejected, since Spark would read it through its `_spark_metadata`
+    * log and hide every `batch_id=` directory; move it aside first. */
   def start(raw: DataFrame, envelopeSchema: StructType,
       trigger: Trigger = Trigger.AvailableNow(),
       schemaGate: Option[(graft.schemaevo.SchemaStore, String, String)] = None)
       : StreamingQuery = {
+    val legacyDlq = Paths.get(s"$warehouseDir/_dlq/_spark_metadata")
+    require(!Files.exists(legacyDlq), s"$warehouseDir/_dlq holds a streaming " +
+      s"file-sink log ($legacyDlq); move that dead-letter directory aside")
     schemaGate.foreach { case (store, subject, avroJson) =>
       gateSchema(store, subject, avroJson)
     }
-    val (good, dlq) = parseWithDlq(raw, envelopeSchema)
-    // fire-and-forget DLQ append (separate sink path, ST6)
-    dlq.writeStream
-      .format("parquet")
-      .option("path", s"$warehouseDir/_dlq")
-      .option("checkpointLocation", s"$checkpointDir/_dlq")
-      .outputMode("append")
-      .trigger(trigger)
-      .start()
-
-    val transformed = Transforms.routeTable(
-      Transforms.dropHeartbeats(good, "topic"), "topic")
-      .withColumn(deleteCol, (col("operation") === ChangeEvent.Delete).cast("string"))
-      .withColumn("commit_ts", timestamp_micros(col(ordCol)))
-      .withWatermark("commit_ts", watermarkDelay)
-      .drop("topic", "operation", "commit_ts")
-
-    transformed.writeStream
+    // S8: PERMISSIVE keeps a line that fails the envelope schema as a
+    // row, its payload in `_corrupt_record` and every other column NULL
+    raw.select(from_json(col("value"), envelopeSchema.add("_corrupt_record", "string"),
+        Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record"))
+        .as("r")).select("r.*")
+      .writeStream
       .option("checkpointLocation", s"$checkpointDir/merge")
       .trigger(trigger)
-      .foreachBatch { (b: DataFrame, id: Long) => mergeMicroBatch(b, id) }
+      .foreachBatch { (b: DataFrame, id: Long) => replicateBatch(b, id) }
       .start()
   }
 }

@@ -43,14 +43,4 @@ object ChangeEvent {
   /** Sink-side CDC metadata columns (init.sql:29-35). */
   val MetaColumns: Seq[String] =
     Seq("__deleted", "cdc_operation", "cdc_timestamp", "cdc_source", "cdc_stream_id")
-
-  /** Dead-letter record schema (data-model.md:173-208). */
-  val dlqSchema: StructType = StructType(Seq(
-    StructField("original_payload", StringType),
-    StructField("error_class", StringType),
-    StructField("error_message", StringType),
-    StructField("failed_at", TimestampType),
-    StructField("retry_count", IntegerType),
-    StructField("source_topic", StringType),
-    StructField("correlation_id", StringType)))
 }

@@ -51,17 +51,9 @@ object Upsert {
     * with per-column partial-update coalescing, dropping keys whose latest
     * event is a delete (ST8, postgres-sink.json:24,40-41). */
   def collapseBatch(df: DataFrame, keys: Seq[String], ord: Column,
-      deleteCol: String, partialUpdateCols: Seq[String] = Seq.empty): DataFrame = {
-    val others = df.columns.filterNot(keys.contains)
-    val aggs = others.map { c =>
-      if (partialUpdateCols.contains(c))
-        max_by(col(c), when(col(c).isNotNull, ord)).as(c)
-      else max_by(col(c), ord).as(c)
-    }
-    df.groupBy(keys.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
+      deleteCol: String, partialUpdateCols: Seq[String] = Seq.empty): DataFrame =
+    collapseBatchKeepDeletes(df, keys, ord, deleteCol, partialUpdateCols)
       .filter(col(deleteCol) =!= lit("true") || col(deleteCol).isNull)
-  }
 
   /** The idempotent MERGE kernel run per micro-batch (foreachBatch): new
     * target snapshot = target ⟗ collapsed-updates with

@@ -76,32 +76,23 @@ object CdcReplicateCli {
     val raw = spark.readStream
       .schema(StructType(Seq(StructField("value", StringType))))
       .text(input).toDF("value")
-    // scope every await/stop/telemetry read to THIS run's queries (the
-    // merge + the fire-and-forget DLQ CdcPipeline.start launches): an
-    // embedded caller's unrelated continuous query on the shared
-    // session must be neither awaited (run() would hang forever) nor
-    // stopped on failure nor reported as CDC state
-    val pre = spark.streams.active.map(_.id).toSet
-    var mine = Set.empty[String]
-    try {
-      val q = pipeline.start(raw, schema, Trigger.AvailableNow())
-      def started = spark.streams.active.filterNot(x => pre(x.id))
-      mine = started.map(_.id.toString).toSet + q.id.toString
-      q.awaitTermination()
-      started.foreach(_.awaitTermination())
-    } catch { case t: Throwable =>
-      // a dying merge query must not leave the fire-and-forget DLQ
-      // stream running in an embedded caller's session
-      spark.streams.active.filterNot(x => pre(x.id)).foreach(q =>
-        try q.stop() catch { case _: Exception => () })
+    // await, stop and report only THIS run's one query: an embedded
+    // caller's unrelated continuous query on the shared session must be
+    // neither awaited (run() would hang forever) nor stopped on failure
+    // nor reported as CDC state
+    val q = pipeline.start(raw, schema, Trigger.AvailableNow())
+    try q.awaitTermination()
+    catch { case t: Throwable =>
+      try q.stop() catch { case _: Exception => () }
       throw t
     }
+    val mine = Set(q.id.toString)
 
     tables.keys.foreach { t =>
       val n = pipeline.readTable(t).map(_.count()).getOrElse(0L)
       println(s"""{"table": "$t", "rows": $n}""")
     }
-    // scope the contract metric to THIS run's queries exactly like the
+    // scope the contract metric to THIS run's query exactly like the
     // state line below: queries here are unnamed, so the listener keys
     // by query id and the registry key is fully reconstructible — an
     // embedded caller's concurrent query can't inflate the count
@@ -119,7 +110,7 @@ object CdcReplicateCli {
     // zero row is the bound being reported, not a missing metric. Any
     // stateful operator a future pipeline shape adds shows up as its
     // own nonzero row automatically.
-    // only THIS run's queries (unnamed → keyed by query id) may feed
+    // only THIS run's query (unnamed → keyed by query id) may feed
     // the CDC contract line — an embedded caller's concurrent stateful
     // query must not masquerade as CDC state
     val mineState = listener.all.view.filterKeys(mine).toMap

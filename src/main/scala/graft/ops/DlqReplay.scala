@@ -17,11 +17,11 @@ object DlqReplay {
 
   final case class ReplayResult(selected: Long, replayed: Long, dryRun: Boolean)
 
-  /** Replay-attempt ledger: the streaming DLQ sink dir can't be rewritten
-    * (its `_spark_metadata` belongs to the sink), and a re-quarantined
-    * payload arrives as a fresh row with retry_count 0 — so attempts are
-    * tracked in a side table keyed by payload hash. `--max-retries` then
-    * bounds REPLAY CYCLES, not just stored rows. */
+  /** Replay-attempt ledger: a re-quarantined payload arrives as a fresh
+    * dead letter with retry_count 0 (the pipeline's batch body writes
+    * every parse failure that way), so attempts are tracked in a side
+    * table keyed by payload hash. `--max-retries` then bounds REPLAY
+    * CYCLES, not just stored rows. */
   private def attemptsPath(dlqPath: String) = s"${dlqPath}__replay_attempts"
 
   private def attempts(spark: SparkSession, dlqPath: String): DataFrame =
@@ -84,9 +84,8 @@ object DlqReplay {
       }
     }
     // bump the attempt ledger for everything just replayed (staging-swap
-    // write: the ledger is ours, unlike the streaming DLQ dir). Union +
-    // sum-per-hash keeps the ledger one row per payload even if dup rows
-    // ever sneak in.
+    // write). Union + sum-per-hash keeps the ledger one row per payload
+    // even if dup rows ever sneak in.
     val bumped = ledger.select(col("payload_hash"), col("attempts"))
       .union(replayable.select(sha2(col("original_payload"), 256).as("payload_hash"),
         lit(1L).as("attempts")))

@@ -549,10 +549,94 @@ class CdcPipelineSpec extends SparkSpec {
       listener.settle()
       assert(listener.registry.counter("records_replicated_total",
         Map("query" -> q.id.toString)) == lines.size)
-      // batchRows holds both queries' batches: the DLQ query reads every
-      // line once too
-      assert(listener.batchRows.map(_._3).sum == 2L * lines.size)
+      // the pipeline runs one query, so its batches read each line once
+      assert(listener.batchRows.map(_._3).sum == lines.size.toLong)
       assert(pipeline.readTable("users").get.count() == 7)
     } finally spark.streams.removeListener(listener)
+  }
+
+  test("ST6 dead letters replay idempotently after a torn commit: _dlq holds " +
+      "each injected poison line once, under the same batch ids as a no-crash run") {
+    import java.nio.file.Paths
+    import scala.jdk.CollectionConverters._
+    // one file per micro-batch; every file carries a poison line
+    val files = (0 to 3).map(i => Seq(
+      ev("INSERT", 1000L + i, s"u$i", s"n$i", "active"), s"poison line $i {"))
+    val in = tmpDir()
+    def writeFile(i: Int): Unit = {
+      val p = Paths.get(s"$in/f$i.json")
+      Files.writeString(p, files(i).mkString("\n"))
+      p.toFile.setLastModified(1700000000000L + i * 60000L)
+    }
+    def drain(wh: String, cp: String): Unit = {
+      val pipeline = new CdcPipeline(spark, wh, cp, Map("users" -> Seq("user_id")),
+        warehouseBuckets = 4)
+      val raw = spark.readStream
+        .schema(StructType(Seq(StructField("value", StringType))))
+        .option("maxFilesPerTrigger", 1).text(in).toDF("value")
+      pipeline.start(raw, envSchema, Trigger.AvailableNow()).awaitTermination(120000)
+    }
+    def deadLetters(wh: String): Seq[(String, Long)] =
+      spark.read.parquet(s"$wh/_dlq").select(col("original_payload"),
+        col("batch_id").cast("long")).as[(String, Long)].collect().toSeq.sorted
+
+    (0 to 3).foreach(writeFile)
+    val whRef = tmpDir()
+    drain(whRef, tmpDir())
+    val want = deadLetters(whRef)
+    assert(want == (0 to 3).map(i => (s"poison line $i {", i.toLong)))
+
+    (0 to 3).foreach(i => Files.delete(Paths.get(s"$in/f$i.json")))
+    writeFile(0); writeFile(1)
+    val wh = tmpDir(); val cp = tmpDir()
+    drain(wh, cp)
+    def batch1FailedAt() = spark.read.parquet(s"$wh/_dlq").filter(col("batch_id") === 1)
+      .select("failed_at").as[java.sql.Timestamp].collect().toSeq
+    val firstWrite = batch1FailedAt()
+    // kill -9 between batch 1's sink writes and its commit: the restarted
+    // query replays batch 1, dead-letter write included
+    val commits = Paths.get(s"$cp/merge/commits")
+    val newest = Files.list(commits).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.forall(_.isDigit))
+      .maxBy(_.getFileName.toString.toLong)
+    assert(newest.getFileName.toString == "1")
+    Files.delete(newest)
+    Files.deleteIfExists(newest.resolveSibling("." + newest.getFileName.toString + ".crc"))
+    writeFile(2); writeFile(3)
+    drain(wh, cp)
+    assert(deadLetters(wh) == want)
+    // the replay rewrote batch 1's dead letter rather than skipping it
+    assert(firstWrite.size == 1 && batch1FailedAt().forall(_.after(firstWrite.head)))
+  }
+
+  test("start runs one streaming query: the returned one, checkpointed under merge") {
+    val in = jsonEvents(Seq(ev("INSERT", 1000L, "u1", "alice", "active"),
+      "this is not json at all"))
+    val wh = tmpDir(); val cp = tmpDir()
+    val pipeline = new CdcPipeline(spark, wh, cp, Map("users" -> Seq("user_id")))
+    val raw = spark.readStream
+      .schema(StructType(Seq(StructField("value", StringType)))).text(in).toDF("value")
+    val before = spark.streams.active.map(_.id).toSet
+    val q = pipeline.start(raw, envSchema, Trigger.ProcessingTime("100 milliseconds"))
+    try {
+      assert(spark.streams.active.map(_.id).toSet == before + q.id)
+      q.processAllAvailable()
+      assert(spark.streams.active.map(_.id).toSet == before + q.id)
+      assert(new java.io.File(cp).list().toSet == Set("merge", "_hwm"))
+      assert(pipeline.readTable("users").get.count() == 1)
+      assert(spark.read.parquet(s"$wh/_dlq").count() == 1)
+    } finally q.stop()
+  }
+
+  test("start rejects a _dlq written by the streaming file sink") {
+    val wh = tmpDir()
+    Files.createDirectories(java.nio.file.Paths.get(s"$wh/_dlq/_spark_metadata"))
+    val pipeline = new CdcPipeline(spark, wh, tmpDir(), Map("users" -> Seq("user_id")))
+    val raw = spark.readStream
+      .schema(StructType(Seq(StructField("value", StringType)))).text(tmpDir()).toDF("value")
+    val before = spark.streams.active.map(_.id).toSet
+    val e = intercept[IllegalArgumentException](pipeline.start(raw, envSchema))
+    assert(e.getMessage.contains(s"$wh/_dlq"))
+    assert(spark.streams.active.map(_.id).toSet == before)
   }
 }

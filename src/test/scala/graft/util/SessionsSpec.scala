@@ -74,4 +74,10 @@ class SessionsSpec extends AnyFunSuite {
     assert(filesMatching("src/main/scala", """\.persist\(""".r) ==
       Set("Materialized.scala", "CurateStreamCli.scala"))
   }
+
+  test("structure: CdcPipeline starts one streaming query and sets no watermark") {
+    val src = Files.readString(Paths.get("src/main/scala/graft/cdc/CdcPipeline.scala"))
+    assert("""\.writeStream\b""".r.findAllIn(src).size == 1)
+    assert(!src.contains(".withWatermark("))
+  }
 }
