@@ -42,10 +42,11 @@ object Verify {
       case c => c.toString
     } + "\""
     // a name-filtered run dumps oracle SQL for ONLY the selected names:
-    // dumping all 143 would make check_oracle judge queries this run
+    // dumping every oracle would make check_oracle judge queries this run
     // never produced — and silently PASS stale parquet left in a reused
-    // outDir by an older build, masking regressions during iteration
-    val json = SparkEntry.oracleSql
+    // outDir by an older build, masking regressions during iteration.
+    // Keys are sorted, so two builds' dumps compare byte for byte.
+    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
       .filter { case (k, _) => only.isEmpty || only(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

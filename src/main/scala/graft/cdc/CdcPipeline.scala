@@ -14,7 +14,7 @@ import scala.util.control.NonFatal
   *   readStream (JSON-envelope source)
   *     → parse PERMISSIVE, keeping `_corrupt_record`            (S8)
   *     → foreachBatch, the batch persisted once:
-  *         corrupt rows → `_dlq/batch_id=<id>`                    (ST6)
+  *         corrupt rows → `_dlq/batch_id=<id>` (if any)           (ST6)
   *         good rows → SMT chain: heartbeat-drop, route, unwrap  (T1–T8)
   *           → late rows (behind the `_hwm` high-water mark)
   *             quarantined to `_late/batch_<id>`                 (ST4)
@@ -202,17 +202,20 @@ final class CdcPipeline(
       lit(null).cast("string").as("correlation_id"))
 
   /** The stream's batch body: the parsed batch is persisted once; its
-    * dead letters overwrite `warehouseDir/_dlq/batch_id=<id>` (a replayed
-    * batch rewrites the same rows; a batch without any leaves a
-    * schema-only file, so `_dlq` always reads as one table), and its
-    * good rows go through the SMT chain — heartbeat drop (T5), topic →
-    * `__table` routing (T4), delete marker (T1) — into [[mergeRows]].
-    * The split comes first: a corrupt row's NULL `topic` would make the
-    * heartbeat filter drop it. */
+    * dead letters are written to `warehouseDir/_dlq` partitioned by
+    * `batch_id`, overwriting only their own `batch_id=<id>` directory (a
+    * replayed batch rewrites the same rows; a batch without any writes
+    * no directory), and its good rows go through the SMT chain —
+    * heartbeat drop (T5), topic → `__table` routing (T4), delete marker
+    * (T1) — into [[mergeRows]]. The split comes first: a corrupt row's
+    * NULL `topic` would make the heartbeat filter drop it. The
+    * dead-letter write is the first action, so its job fills the
+    * persisted batch. */
   private def replicateBatch(parsed: DataFrame, batchId: Long): Unit =
     graft.util.Materialized.scoped(parsed) { rows =>
-      deadLetters(rows).write.mode("overwrite")
-        .parquet(s"$warehouseDir/_dlq/batch_id=$batchId")
+      deadLetters(rows).withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id").parquet(s"$warehouseDir/_dlq")
       val good = rows.filter(col("_corrupt_record").isNull).drop("_corrupt_record")
       val transformed = Transforms.routeTable(Transforms.dropHeartbeats(good, "topic"), "topic")
         .withColumn(deleteCol, (col("operation") === ChangeEvent.Delete).cast("string"))

@@ -3,6 +3,7 @@ package graft.ops
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** DLQ replay (reference: `scripts/replay-dlq.sh` — re-publish dead
   * letters to the original topic in batches, dry-run by default).
@@ -49,12 +50,27 @@ object DlqReplay {
     }
   }
 
+  /** True when `path` holds a file a parquet read would list: one with no
+    * `_` or `.` prefix on any path component below `path`. */
+  private def hasDataFiles(path: String): Boolean = {
+    val root = Paths.get(path)
+    Files.exists(root) && {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.exists { p =>
+        Files.isRegularFile(p) && root.relativize(p).iterator().asScala
+          .forall(c => !c.toString.startsWith("_") && !c.toString.startsWith("."))
+      } finally walk.close()
+    }
+  }
+
   /** Replay to a stream input directory (file-source analog of topic
     * re-publish). Dry-run counts only. */
   def replay(spark: SparkSession, dlqPath: String, inputDir: String,
       maxRetries: Int = 3, errorClass: Option[String] = None,
       batchLimit: Int = 10000, dryRun: Boolean = true): ReplayResult = {
-    if (!Files.exists(Paths.get(dlqPath)))
+    // a `_dlq` whose batches had no dead letters holds no data files, and
+    // an inferred parquet read of it fails
+    if (!hasDataFiles(dlqPath))
       return ReplayResult(0, 0, dryRun)
     val dlq = spark.read.parquet(dlqPath)
     val ledger = attempts(spark, dlqPath)

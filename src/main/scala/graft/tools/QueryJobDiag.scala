@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * stage that ran ≥100 ms with its task count. This is the "which
   * internal checkpoint/action is the expensive one" view that `explain`
   * can't give for query APIs that materialize internal indexes eagerly
-  * (`tools.PlanDump` writes the plans).
+  * (`graft.Plans` writes the plans).
   *
   * Targets: a declared query (`SparkEntry.queries`, forced with
   * `.count()`) or a bench funnel, `curate_funnel` / `curate_funnel_full`,

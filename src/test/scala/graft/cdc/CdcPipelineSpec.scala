@@ -639,4 +639,54 @@ class CdcPipelineSpec extends SparkSpec {
     assert(e.getMessage.contains(s"$wh/_dlq"))
     assert(spark.streams.active.map(_.id).toSet == before)
   }
+
+  /** Drains `files` (one micro-batch each) into a fresh 4-bucket warehouse
+    * and returns its directory. */
+  private def drainFiles(files: Seq[Seq[String]]): String = {
+    val in = tmpDir()
+    files.zipWithIndex.foreach { case (lines, i) =>
+      val p = java.nio.file.Paths.get(s"$in/f$i.json")
+      Files.writeString(p, lines.mkString("\n"))
+      p.toFile.setLastModified(1700000000000L + i * 60000L)
+    }
+    val wh = tmpDir()
+    val pipeline = new CdcPipeline(spark, wh, tmpDir(), Map("users" -> Seq("user_id")),
+      warehouseBuckets = 4)
+    val raw = spark.readStream
+      .schema(StructType(Seq(StructField("value", StringType))))
+      .option("maxFilesPerTrigger", 1).text(in).toDF("value")
+    pipeline.start(raw, envSchema, Trigger.AvailableNow()).awaitTermination(120000)
+    wh
+  }
+
+  test("a batch without dead letters writes no _dlq directory; the others hold " +
+      "exactly the injected poison lines") {
+    val files = Seq(
+      Seq(ev("INSERT", 1000L, "u0", "n0", "active"), "poison line 0 {", "poison line 0b {"),
+      Seq(ev("INSERT", 1001L, "u1", "n1", "active")),
+      Seq(ev("INSERT", 1002L, "u2", "n2", "active"), "poison line 2 {"))
+    val wh = drainFiles(files)
+    val dirs = new java.io.File(s"$wh/_dlq").listFiles().filter(_.isDirectory)
+      .map(_.getName).toSet
+    assert(dirs == Set("batch_id=0", "batch_id=2"))
+    val perBatch = spark.read.parquet(s"$wh/_dlq").groupBy(col("batch_id").cast("long"))
+      .count().as[(Long, Long)].collect().toMap
+    assert(perBatch == Map(0L -> 2L, 2L -> 1L))
+  }
+
+  test("DlqReplay.replay on a _dlq with no data files selects nothing") {
+    val wh = drainFiles(Seq(Seq(ev("INSERT", 1000L, "u0", "n0", "active"))))
+    val dlq = java.nio.file.Paths.get(s"$wh/_dlq")
+    // the drain had no dead letters, so whatever it left under _dlq holds
+    // no parquet data; a marker file stands in for a committer's leftovers
+    Files.createDirectories(dlq)
+    val marker = dlq.resolve("_SUCCESS")
+    if (!Files.exists(marker)) Files.createFile(marker)
+    val in = tmpDir()
+    assert(graft.ops.DlqReplay.replay(spark, dlq.toString, in) ==
+      graft.ops.DlqReplay.ReplayResult(0, 0, dryRun = true))
+    assert(graft.ops.DlqReplay.replay(spark, dlq.toString, in, dryRun = false) ==
+      graft.ops.DlqReplay.ReplayResult(0, 0, dryRun = false))
+    assert(new java.io.File(in).list().isEmpty)
+  }
 }
