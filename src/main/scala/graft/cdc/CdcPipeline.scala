@@ -1,7 +1,10 @@
 package graft.cdc
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -20,14 +23,18 @@ import scala.util.control.NonFatal
   *             quarantined to `_late/batch_<id>`                 (ST4)
   *           → collapse latest-per-key + idempotent monotonic
   *             MERGE into the per-table warehouse                (W1, ST1/2/7/8)
+  *             (the `_late` write and the table merges run at once)
   *
   * One query, one checkpoint (`$checkpointDir/merge`), one parse: the
   * batch body persists the parsed rows for the batch's lifetime
   * ([[graft.util.Materialized.scoped]]), so the dead-letter write, the
-  * merge's one probe aggregate (high-water mark, late rows, tables
-  * touched) and its writes all read them without re-running `from_json`,
-  * and the query's `numInputRows` (`records_replicated_total`) counts
-  * each envelope once.
+  * merge's one probe aggregate (high-water mark, late rows, the tables
+  * and warehouse buckets touched) and its writes all read them without
+  * re-running `from_json`, and the query's `numInputRows`
+  * (`records_replicated_total`) counts each envelope once. The batch's
+  * writes are independent (one directory each), so they run
+  * concurrently, like the reference sink's `tasks.max` workers
+  * (SURVEY.md:462), on a pool that lives for the batch.
   *
   * Exactly-once into a non-transactional sink (SURVEY §7.4.1): Structured
   * Streaming checkpoints offsets (ST3); the merge is idempotent (PK-keyed)
@@ -175,9 +182,11 @@ final class CdcPipeline(
     *
     * `batch` is persisted once, outside the retry loop, so a retried
     * merge reuses the parsed rows; one aggregate job then yields the
-    * batch's max commit ts, its late-row count and the set of tables
-    * its current rows touch (it also fills the cache). The `_late`
-    * write runs only when that count is above 0.
+    * batch's max commit ts, its late-row count and the tables its
+    * current rows touch, each with the warehouse buckets its keys hash
+    * into (it also fills the cache). The `_late` write, which runs only
+    * when that count is above 0, and the per-table merges then run
+    * concurrently; a retry reruns them all.
     *
     * ST4 late-row quarantine: rows whose commit timestamp lags the
     * batch's high-water mark by more than `watermarkDelay` append to
@@ -223,6 +232,15 @@ final class CdcPipeline(
       withRetry(s"merge batch $batchId")(mergeRows(transformed, batchId))
     }
 
+  /** The merge of one parsed, routed batch (see [[mergeMicroBatch]]).
+    * One aggregate job over the batch yields its max commit ts, its
+    * late-row count and every (table, bucket) pair its current rows
+    * touch, the bucket taken with each table's own [[graft.util.BucketedTable.bucketCol]]
+    * (NULL on the snapshot layout, and for a table whose key columns
+    * the batch lacks: its merge then fails on them). The batch's
+    * independent writes, the `_late` quarantine and one merge per
+    * table, then run concurrently ([[runConcurrently]]); `_hwm`
+    * advances only after every one of them succeeded. */
   private def mergeRows(batch: DataFrame, batchId: Long): Unit = {
     // lateness is judged against the PRE-batch high-water mark; rows with
     // a NULL commit ts are unprocessable by an ordering-based merge and
@@ -234,46 +252,93 @@ final class CdcPipeline(
       case None => col(ordCol).isNull
     }
     val isLate = coalesce(lateCond, lit(true))
+    val noBucket = lit(null).cast("int")
+    val bucket =
+      if (warehouseBuckets == 0) noBucket
+      else keysByTable.foldLeft(noBucket) { case (other, (table, keys)) =>
+        if (keys.forall(batch.columns.contains))
+          when(col("__table") === table,
+            graft.util.BucketedTable.bucketCol(keys, warehouseBuckets)).otherwise(other)
+        else other
+      }
     val probe = batch.agg(
       max(col(ordCol)),
       count(when(isLate, 1)),
-      collect_set(when(!isLate, col("__table")))).head()
+      collect_set(when(!isLate, struct(col("__table"), bucket)))).head()
     val batchMax = if (probe.isNullAt(0)) None else Some(probe.getLong(0))
-    if (probe.getLong(1) > 0)
-      // one directory per batch id, overwritten on retry/replay — the
-      // quarantine write stays idempotent under at-least-once delivery
-      batch.filter(isLate).write.mode("overwrite")
-        .parquet(s"$warehouseDir/_late/batch_$batchId")
+    // one directory per batch id, overwritten on retry/replay — the
+    // quarantine write stays idempotent under at-least-once delivery
+    val lateWrite =
+      if (probe.getLong(1) == 0) Nil
+      else Seq(() => batch.filter(isLate).write.mode("overwrite")
+        .parquet(s"$warehouseDir/_late/batch_$batchId"))
     val current = batch.filter(!isLate)
-    val tables = probe.getSeq[String](2)
-    tables.foreach { table =>
-      keysByTable.get(table).foreach { keys =>
-        val updates = current.filter(col("__table") === table).drop("__table")
-        val partialCols =
-          if (partialUpdate) updates.columns.filterNot(c => keys.contains(c) ||
-            c == ordCol || c == deleteCol).toSeq
-          else Seq.empty
-        if (warehouseBuckets > 0)
-          // COW path: rewrites only the buckets this batch's keys touch
-          graft.util.BucketedTable.merge(spark, tablePath(table), updates,
-            keys, ordCol, deleteCol, partialCols, warehouseBuckets)
-        else {
-          val merged = readTable(table) match {
-            case Some(target) =>
-              Upsert.mergeBatch(target, updates, keys, ordCol, deleteCol, partialCols)
-            case None =>
-              Upsert.collapseBatch(updates, keys, col(ordCol), deleteCol, partialCols)
-                .drop(deleteCol)
-          }
-          writeTable(table, merged)
-        }
-      }
+    val touched = probe.getSeq[Row](2).groupMap(_.getString(0))(r =>
+      if (r.isNullAt(1)) None else Some(r.getInt(1)))
+    val merges = touched.toSeq.flatMap { case (table, buckets) =>
+      keysByTable.get(table).map(keys => () =>
+        mergeTable(table, keys, current.filter(col("__table") === table).drop("__table"),
+          buckets.flatten.sorted))
     }
+    runConcurrently(batchId, lateWrite ++ merges)
     // advance the high-water mark only after the batch fully merged
     val newHwm: Option[Long] =
       (prevHwm.toList ::: batchMax.toList).reduceOption(_ max _)
     newHwm.foreach(v => writeHwm(v))
   }
+
+  /** Merge one table's current rows; `touched` is the set of buckets their
+    * keys hash into (unused on the snapshot layout). */
+  private def mergeTable(table: String, keys: Seq[String], updates: DataFrame,
+      touched: Seq[Int]): Unit = {
+    val partialCols =
+      if (partialUpdate) updates.columns.filterNot(c => keys.contains(c) ||
+        c == ordCol || c == deleteCol).toSeq
+      else Seq.empty
+    if (warehouseBuckets > 0)
+      // COW path: rewrites only the buckets this batch's keys touch
+      graft.util.BucketedTable.merge(spark, tablePath(table), updates,
+        keys, ordCol, deleteCol, partialCols, warehouseBuckets, touched)
+    else {
+      val merged = readTable(table) match {
+        case Some(target) =>
+          Upsert.mergeBatch(target, updates, keys, ordCol, deleteCol, partialCols)
+        case None =>
+          Upsert.collapseBatch(updates, keys, col(ordCol), deleteCol, partialCols)
+            .drop(deleteCol)
+      }
+      writeTable(table, merged)
+    }
+  }
+
+  /** Runs a batch's independent writes at once, on a pool of one thread
+    * per write that lives for this call. Each write goes through
+    * `SQLExecution.withThreadLocalCaptured`, so its jobs carry the batch
+    * thread's local properties and job tags (the stream's job group and
+    * batch id: stopping the query cancels them). Every write is awaited
+    * before the first failure is rethrown, and an interrupt stops the
+    * pool and waits for its threads, so a retry never overlaps an
+    * earlier attempt and the batch's storage is never released under a
+    * running write. */
+  private[cdc] def runConcurrently(batchId: Long, writes: Seq[() => Unit]): Unit =
+    if (writes.nonEmpty) {
+      val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val named = new AtomicInteger()
+      val pool = Executors.newFixedThreadPool(writes.size, (r: Runnable) =>
+        new Thread(r, s"cdc-batch-$batchId-write-${named.incrementAndGet()}"))
+      try {
+        val futures = writes.map(w => SQLExecution.withThreadLocalCaptured(session, pool)(w()))
+        val failures = futures.flatMap { f =>
+          try { f.get(); None }
+          catch { case e: ExecutionException => Some(e.getCause) }
+        }
+        failures.headOption.foreach(e => throw e)
+      } finally {
+        // a no-op once every write is done; on an interrupt it stops them
+        pool.shutdownNow()
+        pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      }
+    }
 
   /** V1–V6 as a pre-merge gate (SURVEY §7.4.4): a Spark stream fixes its
     * schema at start, so an envelope-schema change must pass the compat

@@ -15,14 +15,20 @@ import graft.cdc.Upsert
   * pinning n (a restart with a different bucket count would silently
   * scatter keys across two layouts — the metadata check turns that into
   * an immediate error). A merge:
-  *   1. computes the (≤ n) buckets the update keys hash into,
+  *   1. receives from its caller the (≤ n) buckets the update keys hash
+  *      into (the CDC pipeline takes them from its batch probe, so the
+  *      merge runs no job to find them; [[touchedBuckets]] computes them
+  *      for any other caller),
   *   2. reads ONLY those bucket directories (partition pruning — the
   *      plan's PartitionFilters cut at file listing, untouched buckets
   *      are never opened),
   *   3. runs the same idempotent [[Upsert.mergeBatch]] kernel on that
   *      subset,
   *   4. swaps ONLY the affected bucket directories (staging → dest with
-  *      a per-bucket backup dance, same invariant as [[AtomicSnapshot]]).
+  *      a per-bucket backup dance, same invariant as [[AtomicSnapshot]]),
+  *      after checking that the staging write produced no bucket outside
+  *      the caller's set (such a bucket would never be swapped in, and
+  *      its rows would be lost).
   *
   * Rewrite cost is therefore ∝ touched buckets, not table size: a batch
   * touching k of n buckets rewrites k/n of the table — at 100 TB with
@@ -44,6 +50,11 @@ object BucketedTable {
 
   def bucketCol(keys: Seq[String], n: Int): Column =
     pmod(xxhash64(keys.map(col): _*), lit(n)).cast("int")
+
+  /** The buckets `updates`' keys hash into: the `touched` set [[merge]]
+    * takes, found with one `distinct().collect()`. */
+  def touchedBuckets(updates: DataFrame, keys: Seq[String], n: Int): Seq[Int] =
+    updates.select(bucketCol(keys, n)).distinct().collect().map(_.getInt(0)).toSeq.sorted
 
   private def oldRoot(dest: String) = s"${dest}__oldb"
   private def oldFull(dest: String) = s"${dest}__oldfull"
@@ -190,10 +201,12 @@ object BucketedTable {
 
   /** COW merge of one collapsed update batch (same contract as the
     * snapshot path: `updates` carries key cols, `ordCol`, `deleteCol`,
-    * data cols). */
+    * data cols). `touched` must hold every bucket `updates`' keys hash
+    * into ([[touchedBuckets]]); a staging write that lands a bucket
+    * outside it fails the merge before any swap. */
   def merge(spark: SparkSession, dest: String, updates: DataFrame,
       keys: Seq[String], ordCol: String, deleteCol: String,
-      partialUpdateCols: Seq[String], n: Int): Unit =
+      partialUpdateCols: Seq[String], n: Int, touched: Seq[Int]): Unit =
     lockFor(dest).synchronized {
       recoverLocked(dest)
       checkLayout(dest, keys, n)
@@ -204,12 +217,9 @@ object BucketedTable {
           dest, keys, n)
         return
       }
-      val touched = updates.select(bucketCol(keys, n).as("b"))
-        .distinct().collect().map(_.getInt(0)).sorted
-      if (touched.isEmpty) return
       // partition pruning: only the touched bucket dirs are listed/read
       val target = spark.read.parquet(dest)
-        .filter(col("__bucket").isin(touched.map(Integer.valueOf).toSeq: _*))
+        .filter(col("__bucket").isin(touched.map(Integer.valueOf): _*))
         .drop("__bucket")
       val merged = Upsert.mergeBatch(target, updates, keys, ordCol, deleteCol,
         partialUpdateCols)
@@ -217,6 +227,15 @@ object BucketedTable {
       val staging = stagingRoot(dest)
       Fs.deleteRecursive(Paths.get(staging))
       merged.write.partitionBy("__bucket").mode("overwrite").parquet(staging)
+      // a bucket the caller did not name would never be swapped in
+      val stray = Fs.listDir(Paths.get(staging)).map(_.getFileName.toString)
+        .collect { case s"__bucket=$b" => b.toInt }.filterNot(touched.contains)
+      if (stray.nonEmpty) {
+        Fs.deleteRecursive(Paths.get(staging))
+        throw new IllegalStateException(s"merge into $dest wrote buckets " +
+          s"${stray.sorted.mkString(",")} outside the caller's touched set " +
+          s"[${touched.mkString(",")}]")
+      }
       // per-bucket swap with the AtomicSnapshot invariant: the bucket's
       // data survives in either dest or the backup at every instant
       Files.createDirectories(Paths.get(oldRoot(dest)))

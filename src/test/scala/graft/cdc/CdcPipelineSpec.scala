@@ -689,4 +689,143 @@ class CdcPipelineSpec extends SparkSpec {
       graft.ops.DlqReplay.ReplayResult(0, 0, dryRun = false))
     assert(new java.io.File(in).list().isEmpty)
   }
+
+  private val twoTableSchema = StructType(Seq(StructField("__table", StringType),
+    StructField("id", StringType), StructField("k2", StringType),
+    StructField("v", StringType), StructField("commit_timestamp", LongType),
+    StructField("__deleted", StringType)))
+  private def twoTableFrame(rows: Seq[org.apache.spark.sql.Row]) =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), twoTableSchema)
+  /** t0 is keyed by `id`, t1 by (`id`, `k2`): each table hashes its own keys. */
+  private val twoTableKeys = Map("t0" -> Seq("id"), "t1" -> Seq("id", "k2"))
+  private def twoTableBase = {
+    import org.apache.spark.sql.Row
+    twoTableFrame(Seq(
+      Row("t0", "a", null, "v1", 4500000L, "false"),
+      Row("t0", "b", null, "v1", 4500000L, "false"),
+      Row("t1", "a", "x", "w1", 4500000L, "false"),
+      Row("t1", "a", "y", "w1", 4500000L, "false")))
+  }
+  /** With `_hwm` at 5 s and a 1 s delay: updates, a delete and inserts in
+    * both tables, one late row and one without a commit ts. */
+  private def twoTableBatch = {
+    import org.apache.spark.sql.Row
+    twoTableFrame(Seq(
+      Row("t0", "a", null, "v2", 5000001L, "false"),
+      Row("t0", "b", null, null, 5000002L, "true"),
+      Row("t0", "c", null, "v1", 5000003L, "false"),
+      Row("t0", "d", null, "late", 1000L, "false"),
+      Row("t1", "a", "x", "w2", 5000004L, "false"),
+      Row("t1", "b", "z", "w1", 5000005L, "false"),
+      Row("t1", "c", "q", "no-ts", null, "false")))
+  }
+  private def tableRows(p: CdcPipeline, table: String): Set[(String, String, String)] =
+    p.readTable(table).get.select("id", "k2", "v").as[(String, String, String)]
+      .collect().toSet
+
+  /** Spark jobs started by `body` on any thread that carries the caller's
+    * job tag. A marker job run afterwards, and seen by the listener, shows
+    * that the bus has delivered every earlier job. */
+  private def jobsTagged(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = s"cdc-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var markerSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        if (prop("spark.job.tags").exists(_.split(",").contains(tag))) jobs.incrementAndGet()
+        if (prop("graft.test.marker").contains(tag)) markerSeen = true
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.addJobTag(tag)
+      try body finally sc.removeJobTag(tag)
+      sc.setLocalProperty("graft.test.marker", tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.marker", null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(markerSeen, "listener bus did not deliver the marker job")
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("one batch, two tables plus late and NULL-ts rows: the warehouse and _late " +
+      "are exact on both layouts, and the bucketed merge runs no bucket-distinct job") {
+    for (buckets <- Seq(0, 4)) {
+      val wh = tmpDir(); val cp = tmpDir()
+      val pipeline = new CdcPipeline(spark, wh, cp, twoTableKeys,
+        watermarkDelay = "1 second", warehouseBuckets = buckets)
+      pipeline.mergeMicroBatch(twoTableBase, 0L)
+      Files.writeString(java.nio.file.Paths.get(s"$cp/_hwm"), "5000000")
+      val jobs = jobsTagged(pipeline.mergeMicroBatch(twoTableBatch, 1L))
+      assert(tableRows(pipeline, "t0") == Set(("a", null, "v2"), ("c", null, "v1")),
+        s"buckets=$buckets t0")
+      assert(tableRows(pipeline, "t1") ==
+        Set(("a", "x", "w2"), ("a", "y", "w1"), ("b", "z", "w1")), s"buckets=$buckets t1")
+      assert(spark.read.parquet(s"$wh/_late/batch_1").select("id", "v")
+        .as[(String, String)].collect().toSet == Set(("d", "late"), ("c", "no-ts")),
+        s"buckets=$buckets _late")
+      assert(Files.readString(java.nio.file.Paths.get(s"$cp/_hwm")).trim == "5000005")
+      // counted on the pool threads too, since each write carries the batch
+      // thread's job tag. The bucketed merge ran 16 jobs when each table's
+      // merge found its buckets with a distinct().collect() of its own (a
+      // shuffle-map job and a result job under AQE); the probe returns
+      // them now, so both layouts run the same 12.
+      assert(jobs == 12, s"buckets=$buckets: jobs of a two-table merge")
+    }
+  }
+
+  test("one table's merge failing every attempt: its sibling has merged, _hwm " +
+      "stays, and no staging directory or pool thread is left") {
+    import scala.jdk.CollectionConverters._
+    val wh = tmpDir(); val cp = tmpDir()
+    // t1's directory is a plain parquet table, not a bucketed one
+    spark.range(1).write.parquet(s"$wh/t1")
+    Files.writeString(java.nio.file.Paths.get(s"$cp/_hwm"), "5000000")
+    val pipeline = new CdcPipeline(spark, wh, cp, twoTableKeys, watermarkDelay = "1 second",
+      maxMergeRetries = 1, retryBaseBackoffMs = 1, warehouseBuckets = 4)
+    val e = intercept[RuntimeException](pipeline.mergeMicroBatch(twoTableBatch, 3L))
+    assert(e.getMessage.contains("merge batch 3 failed after 1 retries"))
+    assert(e.getCause.getMessage.contains("not a bucketed table"), e.getCause.getMessage)
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(_.getName.startsWith("cdc-batch-3-")),
+      "a write thread outlived the batch")
+    // every write was awaited: the sibling's merge is complete
+    assert(tableRows(pipeline, "t0") == Set(("a", null, "v2"), ("c", null, "v1")))
+    assert(spark.read.parquet(s"$wh/_late/batch_3").count() == 2)
+    assert(Files.readString(java.nio.file.Paths.get(s"$cp/_hwm")).trim == "5000000")
+    assert(!new java.io.File(wh).list().exists(_.endsWith("__stagingb")))
+  }
+
+  test("ST5 an interrupt during the concurrent writes propagates at once, is not " +
+      "retried, and stops every write") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
+    import scala.jdk.CollectionConverters._
+    val pipeline = new CdcPipeline(spark, tmpDir(), tmpDir(),
+      Map("t" -> Seq("id")), maxMergeRetries = 3, retryBaseBackoffMs = 1)
+    val calls = new AtomicInteger(); val stopped = new AtomicInteger()
+    val started = new CountDownLatch(2)
+    val slowWrite = () => {
+      started.countDown()
+      try Thread.sleep(120000)
+      catch { case e: InterruptedException => stopped.incrementAndGet(); throw e }
+    }
+    val outcome = new AtomicReference[Throwable]()
+    val caller = new Thread(() =>
+      try pipeline.withRetry("stopped merge") {
+        calls.incrementAndGet(); pipeline.runConcurrently(7L, Seq(slowWrite, slowWrite))
+      } catch { case t: Throwable => outcome.set(t) })
+    caller.start()
+    assert(started.await(30, TimeUnit.SECONDS))
+    val t0 = System.nanoTime()
+    caller.interrupt()
+    caller.join(30000)
+    assert(!caller.isAlive && (System.nanoTime() - t0) < 10L * 1000 * 1000 * 1000)
+    assert(outcome.get.isInstanceOf[InterruptedException], outcome.get)
+    assert(calls.get == 1 && stopped.get == 2)
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(_.getName.startsWith("cdc-batch-7-")))
+  }
 }

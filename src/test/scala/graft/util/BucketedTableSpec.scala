@@ -67,7 +67,8 @@ class BucketedTableSpec extends SparkSpec {
       (900L, Some("new"), Some(9.0), 200L, "false")
     ).toDF("id", "name", "value", "seq", "__deleted")
     BucketedTable.merge(spark, dest, updates, Seq("id"), "seq", "__deleted",
-      partialUpdateCols = Seq("name", "value"), n = N)
+      partialUpdateCols = Seq("name", "value"), n = N,
+      touched = BucketedTable.touchedBuckets(updates, Seq("id"), N))
 
     // reference: the same kernel applied to the WHOLE table
     val expected = Upsert.mergeBatch(initial, updates, Seq("id"), "seq",
@@ -103,7 +104,7 @@ class BucketedTableSpec extends SparkSpec {
     val deletes = members.map(id => (id, None: Option[String], 200L, "true"))
       .toDF("id", "name", "seq", "__deleted")
     BucketedTable.merge(spark, dest, deletes, Seq("id"), "seq", "__deleted",
-      Seq.empty, N)
+      Seq.empty, N, BucketedTable.touchedBuckets(deletes, Seq("id"), N))
     assert(!Files.exists(Paths.get(dest, s"__bucket=$bucket")),
       "fully-emptied bucket directory should disappear")
     val ids = BucketedTable.read(spark, dest).get.select("id").as[Long].collect().toSet
@@ -118,13 +119,13 @@ class BucketedTableSpec extends SparkSpec {
       (1L, None: Option[String], 200L, "true"),
       (2L, None: Option[String], 200L, "true")).toDF("id", "name", "seq", "__deleted")
     BucketedTable.merge(spark, dest, deleteAll, Seq("id"), "seq", "__deleted",
-      Seq.empty, N)
+      Seq.empty, N, BucketedTable.touchedBuckets(deleteAll, Seq("id"), N))
     assert(BucketedTable.read(spark, dest).isEmpty,
       "zero-row table must read as None, not throw")
     // and the table accepts a fresh merge (re-initializes)
     val revive = Seq((9L, Some("z"), 300L, "false")).toDF("id", "name", "seq", "__deleted")
     BucketedTable.merge(spark, dest, revive, Seq("id"), "seq", "__deleted",
-      Seq.empty, N)
+      Seq.empty, N, BucketedTable.touchedBuckets(revive, Seq("id"), N))
     val ids = BucketedTable.read(spark, dest).get.select("id").as[Long].collect().toSeq
     assert(ids == Seq(9L))
   }
@@ -135,14 +136,14 @@ class BucketedTableSpec extends SparkSpec {
     val upd = Seq((1L, Some("x"), 200L, "false")).toDF("id", "name", "seq", "__deleted")
     val e = intercept[IllegalArgumentException](
       BucketedTable.merge(spark, dest, upd, Seq("id"), "seq", "__deleted",
-        Seq.empty, n = 16))
+        Seq.empty, n = 16, touched = BucketedTable.touchedBuckets(upd, Seq("id"), 16)))
     assert(e.getMessage.contains("8 buckets"))
     // a snapshot-layout dir (plain parquet, no metadata) is refused too
     val snap = tmp()
     initial.write.parquet(snap)
     val e2 = intercept[IllegalStateException](
       BucketedTable.merge(spark, snap, upd, Seq("id"), "seq", "__deleted",
-        Seq.empty, N))
+        Seq.empty, N, BucketedTable.touchedBuckets(upd, Seq("id"), N)))
     assert(e2.getMessage.contains("not a bucketed table"))
     // and a rewrite/merge with DIFFERENT key columns is refused: rows
     // would land in buckets later merges never probe
@@ -174,7 +175,7 @@ class BucketedTableSpec extends SparkSpec {
       val upd = Seq((5L, Some(s"v$i"), Some(5.0 + i), 100L + i, "false"))
         .toDF("id", "name", "value", "seq", "__deleted")
       BucketedTable.merge(spark, dest, upd, Seq("id"), "seq", "__deleted",
-        Seq("name", "value"), N)
+        Seq("name", "value"), N, BucketedTable.touchedBuckets(upd, Seq("id"), N))
     }
     val beforeRows = BucketedTable.read(spark, dest).get
       .orderBy("id").collect().map(_.toString).toSeq
@@ -198,5 +199,30 @@ class BucketedTableSpec extends SparkSpec {
     val recovered = BucketedTable.read(spark, dest)
     assert(recovered.isDefined && recovered.get.count() == 200,
       "full-rewrite backup must be rolled back, not lost")
+  }
+
+  test("merge refuses a staging write with a bucket outside the caller's touched set") {
+    val dest = tmp()
+    BucketedTable.writeFull(initial, dest, Seq("id"), N)
+    val before = fileState(dest)
+    val updates = Seq((5L, Some("x"), Some(5.5), 200L, "false"),
+      (900L, Some("y"), Some(9.0), 200L, "false"))
+      .toDF("id", "name", "value", "seq", "__deleted")
+    val all = BucketedTable.touchedBuckets(updates, Seq("id"), N)
+    assert(all == bucketsOf(Seq(5L, 900L)).values.toSeq.distinct.sorted)
+    // a caller that names one bucket fewer than its keys hash into
+    val e = intercept[IllegalStateException](
+      BucketedTable.merge(spark, dest, updates, Seq("id"), "seq", "__deleted",
+        Seq("name", "value"), N, all.tail))
+    assert(e.getMessage.contains(s"buckets ${all.head} outside"), e.getMessage)
+    // nothing was swapped and the staging directory is gone
+    assert(fileState(dest) == before)
+    assert(!Files.exists(Paths.get(s"${dest}__stagingb")))
+    assert(BucketedTable.read(spark, dest).get.count() == 200)
+    // an empty set is no excuse either: the rows would have been dropped
+    intercept[IllegalStateException](
+      BucketedTable.merge(spark, dest, updates, Seq("id"), "seq", "__deleted",
+        Seq("name", "value"), N, Seq.empty))
+    assert(fileState(dest) == before)
   }
 }

@@ -80,4 +80,11 @@ class SessionsSpec extends AnyFunSuite {
     assert("""\.writeStream\b""".r.findAllIn(src).size == 1)
     assert(!src.contains(".withWatermark("))
   }
+
+  test("structure: CdcPipeline is the one place that runs Spark work on its own threads") {
+    val captured = "withThreadLocalCaptured".r
+    val pools = """Executors\.new|new\s+(ThreadPoolExecutor|ForkJoinPool)\b|ThreadUtils\.new""".r
+    assert(filesMatching("src/main/scala", captured) == Set("CdcPipeline.scala"))
+    assert(filesMatching("src/main/scala", pools) == Set("CdcPipeline.scala"))
+  }
 }
