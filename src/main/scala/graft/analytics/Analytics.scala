@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.Exact._
 import graft.util.GlobalRank.{withGlobalRank, withGlobalRankAndPrefix, withGroupLocalRank}
 
 /** Warehouse-side analytics: the reference's materialized views and
@@ -780,8 +781,7 @@ object Analytics {
     val t = tsMicros(events, tsCol)
     val key = struct(t.as("t"), col(idCol).cast("long").as("i"))
     events.filter(col(valueCol).isNotNull)
-      .groupBy(((t - pmod(t, lit(bucketMicros))) / lit(bucketMicros))
-        .cast("long").as("bucket"))
+      .groupBy(fdiv(t, bucketMicros).as("bucket"))
       .agg(
         min_by(col(valueCol), key).as("open"),
         max(col(valueCol)).as("high"),
@@ -813,7 +813,6 @@ object Analytics {
     * rows — the decimal is load-bearing, not defensive). One pass, two
     * broadcast joins, one 1-row rollup. */
   def spearman(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
     val s = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(xCol).cast("long").as("__x"),
         col(yCol).cast("long").as("__y"))
@@ -838,7 +837,7 @@ object Analytics {
         val den = dec(lit(2L)) * dec(col("n")) *
           (dec(col("n")) * dec(col("n")) - dec(lit(1L)))
         when(col("n") > 1L,
-          lit(1000000L) - ((num - pmod(num, den)) / den).cast("long"))
+          lit(1000000L) - fdiv(num, den))
           .as("rho_ppm")
       })
   }
@@ -959,7 +958,7 @@ object Analytics {
       .select(col("digit"), col("__n").as("n"), {
         val num = col("__n") * lit(1000000L)
         when(col("__tot") > 0L,
-          ((num - pmod(num, col("__tot"))) / col("__tot")).cast("long"))
+          fdiv(num, col("__tot")))
           .otherwise(lit(0L)).as("observed_ppm")
       }, col("expected_ppm"))
       .withColumn("delta_ppm", abs(col("observed_ppm") - col("expected_ppm")))
@@ -1175,7 +1174,6 @@ object Analytics {
     require(windowDays >= 2, s"windowDays must be >= 2, got $windowDays")
     require(sigmas >= 1, s"sigmas must be >= 1, got $sigmas")
     require(minPriorDays >= 2, s"minPriorDays must be >= 2, got $minPriorDays")
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
     // exclude the current day: frame [-windowDays, -1]
     val w = org.apache.spark.sql.expressions.Window.orderBy("day")
       .rangeBetween(-windowDays.toLong, -1L)
@@ -1436,9 +1434,6 @@ object Analytics {
       k: Int): DataFrame = {
     require(minSupport >= 1, s"minSupport must be >= 1, got $minSupport")
     require(k >= 1, s"k must be >= 1, got $k")
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
-    def floorDiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
     // the basket table fans out to FIVE consumers (total, item counts,
     // and the pair self-join's two sides via the pruned table) — left
     // lazy, Spark replans the whole distinct per consumer and the fact
@@ -1472,9 +1467,9 @@ object Analytics {
         .withColumnRenamed("__ni", "__nc")), Seq("consequent"))
       .crossJoin(broadcast(total))
       .select(col("antecedent"), col("consequent"), col("n_both"),
-        floorDiv(dec(col("n_both")) * lit(1000000L), dec(col("__na")))
+        fdiv(dec(col("n_both")) * lit(1000000L), dec(col("__na")))
           .as("confidence_ppm"),
-        floorDiv(dec(col("n_both")) * dec(col("__nb")) * lit(1000000L),
+        fdiv(dec(col("n_both")) * dec(col("__nb")) * lit(1000000L),
           dec(col("__na")) * dec(col("__nc"))).as("lift_ppm"))
       .orderBy(col("confidence_ppm").desc, col("antecedent"),
         col("consequent"))
@@ -1772,7 +1767,6 @@ object Analytics {
     val (ranked, _, total) = withGlobalRankAndPrefix(perPart,
       Seq(col("revenue_fp").desc, col("l_partkey")),
       "revenue_fp", "revenue_rank", "cum_fp")
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
     ranked.withColumn("abc_class",
         when(dec(col("cum_fp")) * 100 <= dec(lit(total)) * aPct, "A")
           .otherwise(
@@ -1835,7 +1829,6 @@ object Analytics {
     * discipline. */
   def monthlyGrowth(orders: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.orderBy("month")
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
     val monthly = orders
       .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
       .agg(sum((col("o_totalprice").cast(DecimalType(18, 2)) * 100)
@@ -1845,7 +1838,7 @@ object Analytics {
       .withColumn("growth_ppm", {
         val num = dec(col("revenue_cents") - col("prev_cents")) * 1000000
         val den = dec(col("prev_cents"))
-        ((num - pmod(num, den)) / den).cast("long")
+        fdiv(num, den)
       })
       .orderBy("month")
   }
@@ -1898,7 +1891,6 @@ object Analytics {
     * by the counting agg. */
   def chiSquareIndependence(orders: DataFrame,
       customer: DataFrame): DataFrame = {
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
     val obs = orders
       .join(broadcast(customer.select(col("c_custkey"),
         col("c_mktsegment"))), col("o_custkey") === col("c_custkey"))
@@ -1909,8 +1901,6 @@ object Analytics {
     val rowT = obs.groupBy("segment").agg(sum("observed").as("__rt"))
     val colT = obs.groupBy("priority").agg(sum("observed").as("__ct"))
     val tot = obs.agg(sum("observed").as("__n"))
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
     val cells = obs
       .join(broadcast(rowT), "segment")
       .join(broadcast(colT), "priority")
@@ -1947,9 +1937,6 @@ object Analytics {
     * TakeOrderedAndProject. Integer cross-multiplication throughout. */
   def keySkewProfile(df: DataFrame, keyCol: String, k: Int = 20): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
     val counts = df.groupBy(col(keyCol)).agg(count(lit(1)).as("cnt"))
       .localCheckpoint() // totals + top-k read it
     val totals = counts.agg(sum("cnt").as("__rows"),
@@ -1973,8 +1960,6 @@ object Analytics {
     val cut = (base + 1) * rem
     // exact floor division on positive longs (the [[associationRules]]
     // idiom) — a bare `/` would go through doubles
-    def fdiv(num: Column, den: Long): Column =
-      ((num - pmod(num, lit(den))) / lit(den)).cast("long")
     when(rank <= cut, fdiv(rank - 1, base + 1) + 1)
       .otherwise(lit(rem) + fdiv(rank - lit(cut) - 1, math.max(base, 1L)) + 1)
       .cast("int")
@@ -2116,9 +2101,6 @@ object Analytics {
     * arithmetic is exact integer cross-multiplication. */
   def coPurchaseClustering(lineitem: DataFrame,
       minSupport: Long): DataFrame = {
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
     val (_, deg, oriented) = coPurchaseOriented(lineitem, minSupport)
     val wedges = orientedWedges(oriented)
     // the closing edge, if present, is oriented __ws → __wd (the wedge
@@ -2247,7 +2229,7 @@ object Analytics {
       fromDate: String, toDate: String, thresholdPpm: Long): DataFrame = {
     require(thresholdPpm >= 1 && thresholdPpm <= 1000000,
       s"thresholdPpm must be in [1, 1000000], got $thresholdPpm")
-    def dec(c: Column) = c.cast(DecimalType(38, 2))
+    def qtyDec(c: Column) = c.cast(DecimalType(38, 2))
     val scoped = part.filter(col("p_name").startsWith(namePrefix))
       .select(col("p_partkey"))
     val pairQty = lineitem
@@ -2256,7 +2238,7 @@ object Analytics {
       .join(broadcast(scoped), col("l_partkey") === col("p_partkey"),
         "left_semi")
       .groupBy(col("l_partkey"), col("l_suppkey"))
-      .agg(sum(dec(col("l_quantity"))).as("__qty"))
+      .agg(sum(qtyDec(col("l_quantity"))).as("__qty"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("l_partkey"))
     val withTotal = pairQty.withColumn("__tot", sum(col("__qty")).over(w))
@@ -2291,9 +2273,6 @@ object Analytics {
     * reaches day_count × total_cents, past 2^63 at warehouse scale. */
   def cusumShift(orders: DataFrame, thresholdCents: Long): DataFrame = {
     require(thresholdCents >= 1, s"thresholdCents must be >= 1, got $thresholdCents")
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
     val daily = orders.withColumn("__t", tsMicros(orders, "o_orderdate"))
       .groupBy(expr("(__t - pmod(__t, 86400000000)) div 86400000000")
         .as("day"))
@@ -2358,8 +2337,7 @@ object Analytics {
     hist
       .withColumn("__cum", sum(col("cnt")).over(ws))
       .withColumn("__n", sum(col("cnt")).over(wseg))
-      .withColumn("__sum", sum((col("gap") * col("cnt"))
-        .cast(DecimalType(38, 0))).over(wseg))
+      .withColumn("__sum", sum(dec(col("gap") * col("cnt"))).over(wseg))
       .groupBy(col("segment"))
       .agg(
         max(col("__n")).as("n_intervals"),
@@ -2435,16 +2413,13 @@ object Analytics {
     * suppliers passes 2^63). */
   def supplierHhi(supplier: DataFrame, nation: DataFrame,
       lineitem: DataFrame): DataFrame = {
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
     val perSupp = lineitem
       .groupBy(col("l_suppkey"))
       .agg(sum((col("l_extendedprice").cast(DecimalType(18, 2)) *
         (lit(1).cast(DecimalType(18, 2)) -
           col("l_discount").cast(DecimalType(18, 2))))
         .cast(DecimalType(38, 6))).as("__rev"))
-      .withColumn("__rev_us", (col("__rev") * 1000000).cast(DecimalType(38, 0)))
+      .withColumn("__rev_us", dec(col("__rev") * 1000000))
     val wn = org.apache.spark.sql.expressions.Window.partitionBy("n_name")
     perSupp
       .join(broadcast(supplier.select(col("s_suppkey"), col("s_nationkey"))),
@@ -2482,9 +2457,6 @@ object Analytics {
       nation: DataFrame, nationName: String,
       meanMultiple: Int): DataFrame = {
     require(meanMultiple >= 1, s"meanMultiple must be >= 1, got $meanMultiple")
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
     val scope = supplier
       .join(broadcast(nation.filter(col("n_name") === lit(nationName))),
         col("s_nationkey") === col("n_nationkey"))
@@ -2549,9 +2521,6 @@ object Analytics {
     * sums inside one hash agg with map-side partials, output bounded by
     * the calendar. */
   def returnRate(lineitem: DataFrame): DataFrame = {
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
     val rev = (col("l_extendedprice").cast(DecimalType(18, 2)) *
       (lit(1).cast(DecimalType(18, 2)) -
         col("l_discount").cast(DecimalType(18, 2))))
@@ -2588,15 +2557,11 @@ object Analytics {
     * months × gap-days-bounded histogram; every window after runs on
     * the histogram. */
   def shipLatency(orders: DataFrame, lineitem: DataFrame): DataFrame = {
-    val oday = (unix_micros(col("o_orderdate").cast("timestamp")) -
-      pmod(unix_micros(col("o_orderdate").cast("timestamp")),
-        lit(86400000000L))) / 86400000000L
-    val sday = (unix_micros(col("l_shipdate").cast("timestamp")) -
-      pmod(unix_micros(col("l_shipdate").cast("timestamp")),
-        lit(86400000000L))) / 86400000000L
-    val gaps = lineitem.select(col("l_orderkey"), sday.cast("long").as("__sd"))
+    val oday = dayNum(unix_micros(col("o_orderdate").cast("timestamp")))
+    val sday = dayNum(unix_micros(col("l_shipdate").cast("timestamp")))
+    val gaps = lineitem.select(col("l_orderkey"), sday.as("__sd"))
       .join(orders.select(col("o_orderkey"),
-        oday.cast("long").as("__od"),
+        oday.as("__od"),
         date_format(col("o_orderdate"), "yyyy-MM").as("__m")),
         col("l_orderkey") === col("o_orderkey"))
       .select(col("__m"), (col("__sd") - col("__od")).as("gap"))
@@ -2609,8 +2574,7 @@ object Analytics {
     hist
       .withColumn("__cum", sum(col("cnt")).over(ws))
       .withColumn("__n", sum(col("cnt")).over(wm))
-      .withColumn("__sum", sum((col("gap") * col("cnt"))
-        .cast(DecimalType(38, 0))).over(wm))
+      .withColumn("__sum", sum(dec(col("gap") * col("cnt"))).over(wm))
       .groupBy(col("month"))
       .agg(
         max(col("__n")).as("n_lines"),
@@ -2769,8 +2733,6 @@ object Analytics {
   def attributionLinear(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, idCol: String, valueCol: String,
       convType: String = "purchase"): DataFrame = {
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
     val wSeg = org.apache.spark.sql.expressions.Window
       .partitionBy("__u").orderBy(col("__t"), col("__id"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
@@ -2920,10 +2882,8 @@ object Analytics {
     * day panel — panel-sized, never event-sized. */
   def dailyStatusLocf(events: DataFrame, userCol: String, typeCol: String,
       tsCol: String, idCol: String): DataFrame = {
-    def dayNum(t: Column) =
-      (t - pmod(t, lit(86400000000L))) / lit(86400000000L)
     val daily = events.select(col(userCol).as("__u"),
-        dayNum(tsMicros(events, tsCol)).cast("long").as("day_num"),
+        dayNum(tsMicros(events, tsCol)).as("day_num"),
         struct(tsMicros(events, tsCol).as("t"), col(idCol).as("id"),
           col(typeCol).as("ty")).as("__e"))
       .groupBy("__u", "day_num")
@@ -3015,9 +2975,6 @@ object Analytics {
     * agg with map-side partials — linear at any history length. */
   def timeWeightedAverage(events: DataFrame, userCol: String,
       valueCol: String, tsCol: String, idCol: String): DataFrame = {
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("__u").orderBy(col("__t"), col("__id"))
     events.select(col(userCol).as("__u"),
@@ -3165,8 +3122,6 @@ object Analytics {
     * per-type window over raw facts. */
   def iqrOutliers(events: DataFrame, typeCol: String, valueCol: String,
       idCol: String): DataFrame = {
-    def ceilDiv(a: Column, b: Long): Column =
-      (a + (b - 1) - pmod(a + (b - 1), lit(b))) / b
     val base = events.select(col(typeCol).as("__ty"),
       col(valueCol).as("__v"), col(idCol).as("__id"))
     val ranked2 = withGroupLocalRank(base, Seq("__ty"),
@@ -3200,9 +3155,6 @@ object Analytics {
     * Scale shape: one scan, one 7-row hash agg with partials, a 1-row
     * total agg broadcast back — no window, no sort beyond 7 rows. */
   def weekdayProfile(orders: DataFrame): DataFrame = {
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
     val daily = orders.select(
         pmod(datediff(to_date(col("o_orderdate")), lit("1970-01-01")) + 4,
           lit(7)).cast("long").as("weekday"),
@@ -3236,17 +3188,15 @@ object Analytics {
     // floor division via the nonnegative-remainder idiom throughout —
     // a bare `/` is IEEE double division in Spark and must not decide
     // bucket boundaries
-    def exactDiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val cents = lineitem.select(
       (col("l_extendedprice").cast(DecimalType(18, 2)) * 100)
         .cast("long").as("__c"))
     val bounds = cents.agg(min(col("__c")).as("__lo"), max(col("__c")).as("__hi"))
     cents.crossJoin(broadcast(bounds))
       // width = ⌈(hi − lo + 1) / buckets⌉, all-integer
-      .withColumn("__w", greatest(exactDiv(
+      .withColumn("__w", greatest(fdiv(
         col("__hi") - col("__lo") + buckets, lit(buckets.toLong)), lit(1L)))
-      .withColumn("bucket", exactDiv(col("__c") - col("__lo"), col("__w")))
+      .withColumn("bucket", fdiv(col("__c") - col("__lo"), col("__w")))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_lines"),
         min(col("__lo") + col("bucket") * col("__w")).as("lo_cents"),
@@ -3300,11 +3250,6 @@ object Analytics {
       idCol: String, loPct: Int = 5, hiPct: Int = 95): DataFrame = {
     require(loPct >= 1 && loPct < hiPct && hiPct <= 100,
       s"need 1 <= loPct < hiPct <= 100, got $loPct, $hiPct")
-    def ceilDiv(a: Column, b: Long): Column =
-      (a + (b - 1) - pmod(a + (b - 1), lit(b))) / b
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
     val base = events.select(col(typeCol).as("__ty"),
       col(valueCol).as("__v"), col(idCol).as("__id"))
     val ranked2 = withGroupLocalRank(base, Seq("__ty"),
@@ -3452,10 +3397,6 @@ object Analytics {
     * window over raw facts (a hot (type, day) cell would serialize). */
   def dailyValueQuantiles(events: DataFrame, typeCol: String,
       tsCol: String, valueCol: String, idCol: String): DataFrame = {
-    def ceilDiv(a: Column, b: Long): Column =
-      (a + (b - 1) - pmod(a + (b - 1), lit(b))) / b
-    def dayNum(t: Column) =
-      ((t - pmod(t, lit(86400000000L))) / lit(86400000000L)).cast("long")
     val base = events.select(col(typeCol).as("__ty"),
       dayNum(tsMicros(events, tsCol)).as("__day"),
       col(valueCol).as("__v"), col(idCol).as("__id"))
@@ -3487,9 +3428,6 @@ object Analytics {
     * broadcast, and the 1-row session total — never events². */
   def sessionPairLift(events: DataFrame, userCol: String, typeCol: String,
       tsCol: String, idCol: String, gapUs: Long): DataFrame = {
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
     val st = gapSessionTag(events, userCol, typeCol, tsCol, idCol, gapUs)
       .select(col("__u"), col("__sid"), col("__ty")).distinct()
       .localCheckpoint() // pairs, per-type counts, total all read it
@@ -3501,6 +3439,17 @@ object Analytics {
     val perType = st.groupBy(col("__ty")).agg(count(lit(1)).as("__nt"))
     val total = st.select(col("__u"), col("__sid")).distinct()
       .agg(count(lit(1)).as("__ns"))
+    pairLiftFold(pairs, perType, total)
+  }
+
+  /** q218's final fold, shared by [[sessionPairLift]] and
+    * [[StreamingAnalytics.sessionPairLiftRollup]] so the two cannot
+    * drift: `pairs` is `(type_a, type_b, n_sessions)`, `perType` is
+    * `(__ty, __nt)` sessions per type, `total` is the 1-row `__ns`
+    * session count. Per-type counts and the total join as broadcasts;
+    * every ppm is floored with DECIMAL(38,0) cross-multiplication. */
+  private[analytics] def pairLiftFold(pairs: DataFrame, perType: DataFrame,
+      total: DataFrame): DataFrame =
     pairs
       .join(broadcast(perType.select(col("__ty").as("type_a"),
         col("__nt").as("__na"))), Seq("type_a"))
@@ -3517,7 +3466,6 @@ object Analytics {
         fdiv(dec(col("n_sessions")) * dec(col("__ns")) * 1000000,
           dec(col("__na")) * dec(col("__nb"))).as("lift_ppm"))
       .orderBy("type_a", "type_b")
-  }
 
   /** Daily growth accounting of active users: each (user, active day)
     * classifies as NEW (first day ever), RETAINED (active the previous
@@ -3536,8 +3484,6 @@ object Analytics {
     * hash agg. */
   def growthAccounting(events: DataFrame, userCol: String,
       tsCol: String): DataFrame = {
-    def dayNum(t: Column) =
-      ((t - pmod(t, lit(86400000000L))) / lit(86400000000L)).cast("long")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("__u").orderBy("__day")
     val panel = events.select(col(userCol).as("__u"),
@@ -3581,9 +3527,6 @@ object Analytics {
     * bounded output. */
   def hourlyProfile(events: DataFrame, tsCol: String,
       valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
     val t = tsMicros(events, tsCol)
     events.select(
         pmod((t - pmod(t, lit(3600000000L))) / lit(3600000000L), lit(24L))
@@ -3623,8 +3566,6 @@ object Analytics {
     * integral epoch days. */
   def recencyHistogram(orders: DataFrame, bucketDays: Int = 30): DataFrame = {
     require(bucketDays >= 1, s"bucketDays must be >= 1, got $bucketDays")
-    def exactDiv(a: Column, b: Long): Column =
-      ((a - pmod(a, lit(b))) / b).cast("long")
     val perCust = orders.select(col("o_custkey").as("__c"),
         datediff(to_date(col("o_orderdate")), lit("1970-01-01"))
           .cast("long").as("__d"))
@@ -3633,7 +3574,7 @@ object Analytics {
     val maxD = perCust.agg(max(col("__last")).as("__max"))
     perCust.crossJoin(broadcast(maxD))
       .withColumn("recency_bucket",
-        exactDiv(col("__max") - col("__last"), bucketDays.toLong))
+        fdiv(col("__max") - col("__last"), bucketDays.toLong))
       .groupBy("recency_bucket")
       .agg(count(lit(1)).as("n_customers"))
       .select(col("recency_bucket"),
@@ -3664,9 +3605,6 @@ object Analytics {
       horizons: Seq[Int] = Seq(7, 14, 30, 60, 90, 180)): DataFrame = {
     require(horizons.nonEmpty && horizons.forall(_ >= 1),
       s"horizons must be >= 1, got $horizons")
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("__c").orderBy("__d")
     val gaps = orders.select(col("o_custkey").as("__c"),
@@ -3724,26 +3662,23 @@ object Analytics {
   def psiDrift(events: DataFrame, typeCol: String, tsCol: String,
       valueCol: String, bins: Int = 10): DataFrame = {
     require(bins >= 1, s"bins must be >= 1, got $bins")
-    def exactDiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
-    val DAY = 86400000000L
     val t = tsMicros(events, tsCol)
     val vm = events.select(col(typeCol).as("__ty"),
-      exactDiv(t, lit(DAY)).as("__day"),
+      dayNum(t).as("__day"),
       floor(col(valueCol) * 1000000d).cast("long").as("__vm"))
     val bounds = vm.groupBy("__ty").agg(
         min(col("__vm")).as("__lo"), max(col("__vm")).as("__hi"),
         min(col("__day")).as("__tdlo"), max(col("__day")).as("__tdhi"))
       .localCheckpoint() // types-bounded; midpoint + bin join read it
     val mid = bounds.agg((min(col("__tdlo")) +
-      exactDiv(max(col("__tdhi")) - min(col("__tdlo")) + 2L, lit(2L)))
+      fdiv(max(col("__tdhi")) - min(col("__tdlo")) + 2L, lit(2L)))
       .as("__mid"))
     val counts = vm.join(broadcast(bounds.drop("__tdlo", "__tdhi")), "__ty")
       .crossJoin(broadcast(mid))
       .withColumn("__half",
         when(col("__day") < col("__mid"), 0L).otherwise(1L))
       .withColumn("__w", ceilBinWidth(col("__lo"), col("__hi"), bins))
-      .withColumn("__b", exactDiv(col("__vm") - col("__lo"), col("__w")))
+      .withColumn("__b", fdiv(col("__vm") - col("__lo"), col("__w")))
       .groupBy("__ty", "__half", "__b").agg(count(lit(1)).as("__c"))
     val frame = bounds.select(col("__ty"),
         explode(sequence(lit(0L), lit((bins - 1).toLong))).as("__b"))
@@ -3776,9 +3711,6 @@ object Analytics {
     * pair volume is Σ basket-brand-count² — bounded by baskets ×
     * brands-per-basket², never lines²; the report is brands²-bounded. */
   def brandPairLift(part: DataFrame, lineitem: DataFrame): DataFrame = {
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
     val ob = lineitem.select(col("l_orderkey").as("__o"),
         col("l_partkey").as("__p"))
       .join(broadcast(part.select(col("p_partkey").as("__p"),
@@ -3820,22 +3752,27 @@ object Analytics {
   def sessionBounceRate(events: DataFrame, userCol: String,
       typeCol: String, tsCol: String, idCol: String,
       gapUs: Long): DataFrame = {
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
     val tagged = gapSessionTag(events, userCol, typeCol, tsCol, idCol, gapUs)
-    tagged.groupBy("__u", "__sid")
+    bounceFold(tagged.groupBy("__u", "__sid")
       .agg(count(lit(1)).as("__n"),
         min(struct(col("__t"), col("__id"), col("__ty"))).as("__first"))
-      .select(col("__first.__ty").as("entry_type"), col("__n"))
-      .groupBy("entry_type")
+      .select(col("__first.__ty").as("entry_type"), col("__n")), "__n")
+  }
+
+  /** q236's final fold, shared by [[sessionBounceRate]] and
+    * [[StreamingAnalytics.sessionBounceRollup]] so the two cannot
+    * drift: one row per session with its `entry_type` and its event
+    * count in `nEventsCol`, to `(entry_type, n_sessions, n_bounces,
+    * bounce_ppm)` — a session of one event is a bounce. */
+  private[analytics] def bounceFold(sessions: DataFrame,
+      nEventsCol: String): DataFrame =
+    sessions.groupBy("entry_type")
       .agg(count(lit(1)).as("n_sessions"),
-        sum(when(col("__n") === 1L, 1L).otherwise(0L)).as("n_bounces"))
+        sum(when(col(nEventsCol) === 1L, 1L).otherwise(0L)).as("n_bounces"))
       .select(col("entry_type"), col("n_sessions"), col("n_bounces"),
         fdiv(dec(col("n_bounces")) * 1000000, dec(col("n_sessions")))
           .as("bounce_ppm"))
       .orderBy("entry_type")
-  }
 
   /** Seasonal-naive forecast backtest: score the forecast
     * "revenue(d) ≈ revenue(d − 7)" (same weekday last week — the
@@ -3855,9 +3792,6 @@ object Analytics {
     * panel-sized equi-join, and the report is months-bounded. */
   def seasonalNaiveBacktest(orders: DataFrame, lagDays: Int = 7): DataFrame = {
     require(lagDays >= 1, s"lagDays must be >= 1, got $lagDays")
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
     val panel = orders.select(
         datediff(to_date(col("o_orderdate")), lit("1970-01-01"))
           .cast("long").as("__d"),
@@ -3892,9 +3826,6 @@ object Analytics {
     * (the global-rank consolidation rule). */
   private[graft] def psiFold(cells: DataFrame, keys: Seq[String],
       bins: Int): DataFrame = {
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
     def lnMicro(c: Column): Column =
       floor(log(c.cast("double")) * lit(1000000L)).cast("long")
     val keyCols = keys.map(col)
@@ -3918,9 +3849,7 @@ object Analytics {
     * widths can never diverge. */
   private[analytics] def ceilBinWidth(lo: Column, hi: Column,
       bins: Int): Column = {
-    def exactDiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
-    greatest(exactDiv(hi - lo + bins, lit(bins.toLong)), lit(1L))
+    greatest(fdiv(hi - lo + bins, lit(bins.toLong)), lit(1L))
   }
 
   /** The shared clamped bin assignment: `(vm − lo) div width` clamped
@@ -3931,9 +3860,7 @@ object Analytics {
     * congruence both docstrings advertise). */
   private[graft] def clampedBin(vm: Column, lo: Column, width: Column,
       bins: Int): Column = {
-    def exactDiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
-    least(greatest(exactDiv(vm - lo, width), lit(0L)),
+    least(greatest(fdiv(vm - lo, width), lit(0L)),
       lit((bins - 1).toLong))
   }
 
@@ -4040,11 +3967,9 @@ object Analytics {
     * ~30-year calendar. */
   def typeDailyCorrelation(events: DataFrame, typeCol: String,
       tsCol: String): DataFrame = {
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
-    val DAY = 86400000000L
     val t = tsMicros(events, tsCol)
     val daily = events.select(col(typeCol).as("__ty"),
-        (((t - pmod(t, lit(DAY))) / DAY).cast("long")).as("__day"))
+        dayNum(t).as("__day"))
       .groupBy("__ty", "__day").agg(count(lit(1)).as("__n"))
       .localCheckpoint() // (types × active days); span + moments + Σxy
     val span = daily.agg((max(col("__day")) - min(col("__day")) + 1L)
@@ -4068,8 +3993,8 @@ object Analytics {
       .join(broadcast(sxy), Seq("__ta", "__tb"), "left")
       .crossJoin(broadcast(span))
       .select(col("__ta"), col("__tb"), col("__nd"),
-        (dec(col("__nd")) * coalesce(col("__sxy"), lit(0).cast(
-          DecimalType(38, 0))) - dec(col("__sxa")) * dec(col("__sxb")))
+        (dec(col("__nd")) * coalesce(col("__sxy"), dec(lit(0))) -
+          dec(col("__sxa")) * dec(col("__sxb")))
           .as("__num"),
         (dec(col("__nd")) * col("__sxxa") - dec(col("__sxa")) *
           dec(col("__sxa"))).as("__dena"),
@@ -4092,13 +4017,11 @@ object Analytics {
     * [[revenueAutocorrelation]] q237 both render through it). */
   private def signedR2Ppm(num: Column, dena: Column,
       denb: Column): Column = {
-    def fdiv(n: Column, d: Column) =
-      ((n - pmod(n, d)) / d).cast(DecimalType(38, 0))
     when(dena === 0 || denb === 0, lit(null).cast("long"))
       .otherwise((when(num > 0, 1L).when(num < 0, -1L).otherwise(0L) *
-        fdiv(fdiv(abs(num) * 1000000, dena) *
-          fdiv(abs(num) * 1000000, denb),
-          lit(1000000).cast(DecimalType(38, 0))).cast("long"))
+        fdivDec(fdivDec(abs(num) * 1000000, dena) *
+          fdivDec(abs(num) * 1000000, denb),
+          dec(lit(1000000))).cast("long"))
         .cast("long"))
   }
 
@@ -4121,9 +4044,6 @@ object Analytics {
       supplier: DataFrame, nation: DataFrame,
       budgetDays: Int = 60): DataFrame = {
     require(budgetDays >= 0, s"budgetDays must be >= 0, got $budgetDays")
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
     val perSupp = lineitem.select(col("l_orderkey").as("__o"),
         col("l_suppkey").as("__s"), to_date(col("l_shipdate")).as("__sd"))
       .join(orders.select(col("o_orderkey").as("__o"),
@@ -4166,9 +4086,6 @@ object Analytics {
     * discipline at corpus-lifetime grain). */
   def audienceOverlap(events: DataFrame, typeCol: String,
       userCol: String): DataFrame = {
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
     val tu = events.select(col(typeCol).as("__ty"), col(userCol).as("__u"))
       .distinct()
       .localCheckpoint() // sizes + both self-join sides read it
@@ -4204,8 +4121,6 @@ object Analytics {
     * 1-row agg — never a second scan. */
   def typeFreshness(events: DataFrame, typeCol: String,
       tsCol: String): DataFrame = {
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
     val per = events.select(col(typeCol).as("event_type"),
         tsMicros(events, tsCol).as("__t"))
       .groupBy("event_type")
@@ -4236,14 +4151,11 @@ object Analytics {
       toType: String, windowUs: Long): DataFrame = {
     require(windowUs > 0, s"windowUs must be positive, got $windowUs")
     require(fromType != toType, "fromType and toType must differ")
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("__u").orderBy(col("__t"), col("__id"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.currentRow,
         org.apache.spark.sql.expressions.Window.unboundedFollowing)
-    val perUser = events
+    val fromEvents = events
       .select(col(userCol).as("__u"), col(typeCol).as("__ty"),
         tsMicros(events, tsCol).as("__t"), col(idCol).as("__id"))
       .filter(col("__ty").isin(fromType, toType))
@@ -4256,9 +4168,20 @@ object Analytics {
       .withColumn("__abd",
         when(col("__nb").isNull || col("__nb") > col("__t") + windowUs,
           1L).otherwise(0L))
-      .groupBy("__u")
-      .agg(count(lit(1)).as("__nf"), sum(col("__abd")).as("__na"))
-    perUser.agg(sum(col("__nf")).as("n_from_events"),
+    abandonFold(fromEvents, "__u", col("__abd"))
+  }
+
+  /** q241's final fold, shared by [[abandonmentCensus]] and
+    * [[StreamingAnalytics.abandonmentRollup]] so the two cannot drift:
+    * one row per `fromType` event, keyed by `userCol`, with `abandoned`
+    * 1 for an abandoned event and 0 otherwise, to the one row
+    * `(n_from_events, n_abandoned, abandon_ppm, n_users_abandoning)` —
+    * a per-user hash agg, then the 1-row rollup. */
+  private[analytics] def abandonFold(fromEvents: DataFrame, userCol: String,
+      abandoned: Column): DataFrame =
+    fromEvents.groupBy(userCol)
+      .agg(count(lit(1)).as("__nf"), sum(abandoned).as("__na"))
+      .agg(sum(col("__nf")).as("n_from_events"),
         sum(col("__na")).as("n_abandoned"),
         sum(when(col("__na") > 0, 1L).otherwise(0L))
           .as("n_users_abandoning"))
@@ -4266,7 +4189,6 @@ object Analytics {
         fdiv(dec(col("n_abandoned")) * 1000000, dec(col("n_from_events")))
           .as("abandon_ppm"),
         col("n_users_abandoning"))
-  }
 
   /** Per-customer spend-trend census: each customer's order-value
     * trajectory classified by the SIGN of its OLS slope over time
@@ -4290,7 +4212,6 @@ object Analytics {
     * DECIMAL(38,0) at any realistic scale. */
   def customerTrendCensus(orders: DataFrame,
       customer: DataFrame): DataFrame = {
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
     val per = orders.select(col("o_custkey").as("__c"),
         dec(datediff(to_date(col("o_orderdate")), lit("1970-01-01"))
           .cast("long")).as("__t"),
@@ -4335,8 +4256,7 @@ object Analytics {
       lags: Seq[Int] = Seq(1, 7)): DataFrame = {
     require(lags.nonEmpty && lags.forall(_ >= 1),
       s"lags must be >= 1, got $lags")
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
-    val zero = lit(0).cast(DecimalType(38, 0))
+    val zero = dec(lit(0))
     val panel = orders.select(
         datediff(to_date(col("o_orderdate")), lit("1970-01-01"))
           .cast("long").as("__d"),

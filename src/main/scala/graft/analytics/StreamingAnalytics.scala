@@ -503,24 +503,13 @@ object StreamingAnalytics {
     * sink table, or on any frame of [[ClosedSessionEntry]] rows)
     * producing EXACTLY [[Analytics.sessionBounceRate]]'s output —
     * `(entry_type, n_sessions, n_bounces, bounce_ppm)`, floored ppm —
-    * so streaming and batch censuses are directly comparable.
+    * so streaming and batch censuses are directly comparable. Both
+    * run the one fold, [[Analytics.bounceFold]].
     *
     * Scale shape: vocabulary-bounded hash agg with map-side partials;
     * the ppm render is exact integer. */
-  def sessionBounceRollup(closedSessions: DataFrame): DataFrame = {
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
-    def dec(c: Column) =
-      c.cast(org.apache.spark.sql.types.DecimalType(38, 0))
-    closedSessions.groupBy("entry_type")
-      .agg(count(lit(1)).as("n_sessions"),
-        sum(when(col("n_events") === 1L, 1L).otherwise(0L))
-          .as("n_bounces"))
-      .select(col("entry_type"), col("n_sessions"), col("n_bounces"),
-        fdiv(dec(col("n_bounces")) * 1000000, dec(col("n_sessions")))
-          .as("bounce_ppm"))
-      .orderBy("entry_type")
-  }
+  def sessionBounceRollup(closedSessions: DataFrame): DataFrame =
+    Analytics.bounceFold(closedSessions, "n_events")
 
   /** Streaming session TYPE-SET builder — the state [[Analytics
     * .sessionPairLift]] (q218) needs at session grain: each closed gap
@@ -578,7 +567,8 @@ object StreamingAnalytics {
     * cross-multiplication) computed from the emitted session frames,
     * so streaming and batch statistics are directly comparable. Run it
     * in `foreachBatch` over an appended sink table, or on any batch
-    * frame of [[ClosedSessionTypes]] rows.
+    * frame of [[ClosedSessionTypes]] rows. Both run the one final
+    * fold, [[Analytics.pairLiftFold]].
     *
     * Scale shape: the pair generation is a DOUBLE EXPLODE over each
     * session's (already-distinct, vocabulary-bounded) type array —
@@ -591,10 +581,6 @@ object StreamingAnalytics {
     * localCheckpoint here would pin one RDD per `foreachBatch`
     * invocation with no release point — a storage leak on a stream. */
   def sessionPairLiftRollup(closedSessions: DataFrame): DataFrame = {
-    def dec(c: Column) =
-      c.cast(org.apache.spark.sql.types.DecimalType(38, 0))
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
     val base = closedSessions.select(col("types"))
     val pairs = base
       .select(explode(col("types")).as("type_a"), col("types"))
@@ -604,22 +590,7 @@ object StreamingAnalytics {
     val perType = base.select(explode(col("types")).as("__ty"))
       .groupBy("__ty").agg(count(lit(1)).as("__nt"))
     val total = base.agg(count(lit(1)).as("__ns"))
-    pairs
-      .join(broadcast(perType.select(col("__ty").as("type_a"),
-        col("__nt").as("__na"))), Seq("type_a"))
-      .join(broadcast(perType.select(col("__ty").as("type_b"),
-        col("__nt").as("__nb"))), Seq("type_b"))
-      .crossJoin(broadcast(total))
-      .select(col("type_a"), col("type_b"), col("n_sessions"),
-        fdiv(dec(col("n_sessions")) * 1000000, dec(col("__ns")))
-          .as("support_ppm"),
-        fdiv(dec(col("n_sessions")) * 1000000, dec(col("__na")))
-          .as("conf_a_to_b_ppm"),
-        fdiv(dec(col("n_sessions")) * 1000000, dec(col("__nb")))
-          .as("conf_b_to_a_ppm"),
-        fdiv(dec(col("n_sessions")) * dec(col("__ns")) * 1000000,
-          dec(col("__na")) * dec(col("__nb"))).as("lift_ppm"))
-      .orderBy("type_a", "type_b")
+    Analytics.pairLiftFold(pairs, perType, total)
   }
 
   /** Streaming session-scoped funnel — the incremental counterpart of
@@ -960,27 +931,14 @@ object StreamingAnalytics {
     * [[Analytics.abandonmentCensus]]'s one-row output —
     * `(n_from_events, n_abandoned, abandon_ppm,
     * n_users_abandoning)`, floored ppm — so streaming and batch
-    * censuses are directly comparable on any ripe prefix.
+    * censuses are directly comparable on any ripe prefix. Both run
+    * the one fold, [[Analytics.abandonFold]].
     *
     * Scale shape: per-user hash agg with map-side partials, then a
     * 1-row fold; the ppm render is exact integer. */
-  def abandonmentRollup(verdicts: DataFrame): DataFrame = {
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
-    def dec(c: Column) =
-      c.cast(org.apache.spark.sql.types.DecimalType(38, 0))
-    verdicts.groupBy("user_id")
-      .agg(count(lit(1)).as("__nf"),
-        sum(when(col("abandoned"), 1L).otherwise(0L)).as("__na"))
-      .agg(sum(col("__nf")).as("n_from_events"),
-        sum(col("__na")).as("n_abandoned"),
-        sum(when(col("__na") > 0, 1L).otherwise(0L))
-          .as("n_users_abandoning"))
-      .select(col("n_from_events"), col("n_abandoned"),
-        fdiv(dec(col("n_abandoned")) * 1000000, dec(col("n_from_events")))
-          .as("abandon_ppm"),
-        col("n_users_abandoning"))
-  }
+  def abandonmentRollup(verdicts: DataFrame): DataFrame =
+    Analytics.abandonFold(verdicts, "user_id",
+      when(col("abandoned"), 1L).otherwise(0L))
 
   /** Streaming daily growth accounting — the incremental counterpart
     * of [[Analytics.growthAccounting]] (q219): each (user, active day)

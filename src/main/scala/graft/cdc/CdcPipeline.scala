@@ -222,9 +222,9 @@ final class CdcPipeline(
     * persisted batch. */
   private def replicateBatch(parsed: DataFrame, batchId: Long): Unit =
     graft.util.Materialized.scoped(parsed) { rows =>
-      deadLetters(rows).withColumn("batch_id", lit(batchId))
+      named(batchId, "dead letters")(deadLetters(rows).withColumn("batch_id", lit(batchId))
         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(s"$warehouseDir/_dlq")
+        .partitionBy("batch_id").parquet(s"$warehouseDir/_dlq"))
       val good = rows.filter(col("_corrupt_record").isNull).drop("_corrupt_record")
       val transformed = Transforms.routeTable(Transforms.dropHeartbeats(good, "topic"), "topic")
         .withColumn(deleteCol, (col("operation") === ChangeEvent.Delete).cast("string"))
@@ -261,30 +261,46 @@ final class CdcPipeline(
             graft.util.BucketedTable.bucketCol(keys, warehouseBuckets)).otherwise(other)
         else other
       }
-    val probe = batch.agg(
+    val probe = named(batchId, "probe")(batch.agg(
       max(col(ordCol)),
       count(when(isLate, 1)),
-      collect_set(when(!isLate, struct(col("__table"), bucket)))).head()
+      collect_set(when(!isLate, struct(col("__table"), bucket)))).head())
     val batchMax = if (probe.isNullAt(0)) None else Some(probe.getLong(0))
     // one directory per batch id, overwritten on retry/replay — the
     // quarantine write stays idempotent under at-least-once delivery
     val lateWrite =
       if (probe.getLong(1) == 0) Nil
-      else Seq(() => batch.filter(isLate).write.mode("overwrite")
-        .parquet(s"$warehouseDir/_late/batch_$batchId"))
+      else Seq(() => named(batchId, "_late")(batch.filter(isLate).write.mode("overwrite")
+        .parquet(s"$warehouseDir/_late/batch_$batchId")))
     val current = batch.filter(!isLate)
     val touched = probe.getSeq[Row](2).groupMap(_.getString(0))(r =>
       if (r.isNullAt(1)) None else Some(r.getInt(1)))
     val merges = touched.toSeq.flatMap { case (table, buckets) =>
-      keysByTable.get(table).map(keys => () =>
+      keysByTable.get(table).map(keys => () => named(batchId, s"merge $table")(
         mergeTable(table, keys, current.filter(col("__table") === table).drop("__table"),
-          buckets.flatten.sorted))
+          buckets.flatten.sorted)))
     }
     runConcurrently(batchId, lateWrite ++ merges)
     // advance the high-water mark only after the batch fully merged
     val newHwm: Option[Long] =
       (prevHwm.toList ::: batchMax.toList).reduceOption(_ max _)
     newHwm.foreach(v => writeHwm(v))
+  }
+
+  /** Runs `body` with its Spark jobs named `cdc batch <id>: <what>`, the
+    * call site the UI, listeners and trace spans show for each job and
+    * stage. Both forms are set: with the long form unset, Spark would
+    * take a stack trace for every RDD and SQL execution it creates.
+    * The thread's previous call site is restored afterwards: on the
+    * stream thread it is the query's `start` site, and a name left
+    * there would stick to every later job of the stream. The concurrent
+    * writes call it on their pool thread, inside the write. */
+  private def named[T](batchId: Long, what: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val keys = Seq("callSite.short", "callSite.long")
+    val saved = keys.map(sc.getLocalProperty)
+    keys.foreach(sc.setLocalProperty(_, s"cdc batch $batchId: $what"))
+    try body finally keys.zip(saved).foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
 
   /** Merge one table's current rows; `touched` is the set of buckets their

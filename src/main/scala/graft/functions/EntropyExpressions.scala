@@ -8,14 +8,11 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.Exact.lfp
+
 /** Kernel behind [[CharEntropy]] — one static entry point shared by the
   * interpreted and generated paths. */
 object EntropyKernels {
-  /** ⌊ln(x)·10⁶⌋ via the same double-precision ln both the SQL fold
-    * (`floor(log(c) * 1000000L)`) and the DuckDB oracle use. */
-  private def lfp(x: Long): Long =
-    math.floor(math.log(x.toDouble) * 1000000L).toLong
-
   /** Fixed-point character entropy of one document, replicating the
     * explode→(doc,char) hash-agg→per-doc fold SQL shape EXACTLY:
     * counts are per Unicode code point (what `regexp_extract_all(s,

@@ -75,9 +75,9 @@ object ReconcileQueries extends QueryFamily("reconcile") {
       Differ.findDuplicates(Tables.lineitem(s, d), Seq("l_orderkey"))),
       "SELECT l_orderkey, count(*) AS n FROM lineitem GROUP BY 1 HAVING count(*) > 1"),
     spec("q17_mismatch_fields", ((s, d) => {
-      def dec(df: DataFrame) = df.withColumn("o_totalprice",
+      def priceDec(df: DataFrame) = df.withColumn("o_totalprice",
         col("o_totalprice").cast(DecimalType(18, 2)))
-      Differ.findMismatchesDetailed(dec(srcOrders(s, d)), dec(tgtOrders(s, d)),
+      Differ.findMismatchesDetailed(priceDec(srcOrders(s, d)), priceDec(tgtOrders(s, d)),
         Seq("o_orderkey"))
     }),
       s"""WITH src AS ($srcSql), tgt AS ($tgtSql)

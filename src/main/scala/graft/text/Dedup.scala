@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact._
 import graft.util.{Materialized, Salting}
 
 /** Deduplication operators over a documents table — the four standard
@@ -584,10 +585,6 @@ object Dedup {
     * integer cross-multiplication — no floats. */
   def sourceOverlapMatrix(df: DataFrame, groupCol: String, textCol: String,
       k: Int = 3): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
     val sh = df.select(col(groupCol).as("src"),
         explode(shingleHashes(col(textCol), k, distinct = true)).as("shingle"))
       .distinct()
@@ -804,8 +801,7 @@ object Dedup {
       .select(col("id"), col("__syms"), size(col("__syms")).as("__sz"))
       .localCheckpoint()
     // prefix length ℓ = s − ⌈t'·s⌉ + 1, exact integer ceil
-    val ceilTs = ((col("__sz").cast("long") * tPpm + lit(999999L)) -
-      pmod(col("__sz").cast("long") * tPpm + lit(999999L), lit(1000000L))) / lit(1000000L)
+    val ceilTs = ceilDiv(col("__sz").cast("long") * tPpm, 1000000L)
     val prefixes = docs
       .select(col("id"),
         explode(slice(col("__syms"), lit(1),

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact._
+
 /** Full-text retrieval over the `documents` table: BM25 scoring against
   * a fixed set of query terms, the inverted-index probe a curation
   * pipeline uses to find "docs about X" without re-scanning text.
@@ -38,16 +40,6 @@ import org.apache.spark.sql.functions._
   * join. Top-k is TakeOrderedAndProject — never a global sort.
   */
 object Retrieval {
-
-  /** `L(n) = floor(ln(n)·10⁶)` — fixed-point log on an integer arg. */
-  private def lfp(c: Column): Column =
-    floor(log(c.cast("double")) * lit(1000000L)).cast("long")
-
-  private def dec(c: Column): Column = c.cast("decimal(38,0)")
-
-  /** Exact floor division for nonnegative decimals: (a − a mod b)/b. */
-  private def floorDiv(a: Column, b: Column): Column =
-    ((a - pmod(a, b)) / b).cast("decimal(38,0)")
 
   // tf/df columns are named by TERM INDEX, never by the term itself —
   // a term containing `.` or a backtick would make col("__tf_$term")
@@ -93,7 +85,7 @@ object Retrieval {
       val den = dec(lit(10L)) * dec(tt) * dec(tf) + dec(lit(3L)) * dec(tt) +
         dec(lit(9L)) * dec(dl) * dec(n)
       // tf = 0 ⇒ num = 0 ⇒ term contributes 0 (den is always > 0)
-      floorDiv(dec(idfFp) * floorDiv(num, den), dec(lit(1000000L))).cast("long")
+      fdivDec(dec(idfFp) * fdivDec(num, den), dec(lit(1000000L))).cast("long")
     }
     perDoc.crossJoin(broadcast(stats))
       .select(col("__id").as(idCol),
@@ -173,7 +165,7 @@ object Retrieval {
         val den = dec(lit(10L)) * dec(col("__t")) * dec(col("tf")) +
           dec(lit(3L)) * dec(col("__t")) +
           dec(lit(9L)) * dec(col("__dl")) * dec(col("__n"))
-        floorDiv(dec(idfFp) * floorDiv(num, den), dec(lit(1000000L)))
+        fdivDec(dec(idfFp) * fdivDec(num, den), dec(lit(1000000L)))
           .cast("long").as("__s")
       })
       .localCheckpoint()

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact._
+
 /** Text-analysis operators for a training-data pipeline over the
   * `documents` table: tokenization, quality scoring, language ID,
   * fingerprinting. All pure `functions._` expression compositions —
@@ -57,14 +59,12 @@ object TextAnalysis {
     * float comparisons. */
   def qualityScoreE6(c: Column, stopwords: Seq[String]): Column = {
     // exact integer floor-division: (a - a%b)/b with a < 2^53
-    def exactDiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val toks = greatest(tokenCount(c), lit(1)).cast("long")
     val sw = stopwordCount(c, stopwords).cast("long")
     val lenE6 = least(tokenCount(c).cast("long"), lit(100L)) * lit(4000L)
     val punctE6 = when(punctRatio(c) < 0.2, lit(300000L)).otherwise(lit(90000L))
-    val swFracE6 = least(exactDiv(sw * lit(5000000L), toks), lit(1000000L))
-    val swE6 = exactDiv(swFracE6 * lit(3L), lit(10L))
+    val swFracE6 = least(fdiv(sw * lit(5000000L), toks), lit(1000000L))
+    val swE6 = fdiv(swFracE6 * lit(3L), lit(10L))
     lenE6 + punctE6 + swE6
   }
 
@@ -503,8 +503,6 @@ object TextAnalysis {
       s"buckets must be in [1, 1e6], got $buckets")
     val spark = df.sparkSession
     import spark.implicits._
-    def exactDiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val coin = pmod(
       graft.functions.TextHashExpressions.polyHash62(
         concat(col(idCol).cast("string"), lit("#shard"))),
@@ -514,7 +512,7 @@ object TextAnalysis {
         tokenCount(col(textCol)).cast("long").as("n_tokens"),
         coin.as("__coin"))
       .withColumn("__bkt",
-        exactDiv(col("__coin") * lit(buckets.toLong), lit(1000000L)).cast("int"))
+        fdiv(col("__coin") * lit(buckets.toLong), lit(1000000L)).cast("int"))
       .localCheckpoint() // read twice: bucket totals + laid-out assignment
     // exclusive prefix (each doc's START offset) over the coin order —
     // the shared bucketed-offset machinery
@@ -522,7 +520,7 @@ object TextAnalysis {
       Seq(col("__coin"), col("__id")), "n_tokens", "__start",
       inclusive = false)
     laid.select(col("__id").as(idCol), col("n_tokens"),
-      exactDiv(col("__start"), lit(targetTokens)).as("shard_id"))
+      fdiv(col("__start"), lit(targetTokens)).as("shard_id"))
   }
 
   /** Quality-ranked corpus selection under a token budget: keep the
@@ -748,7 +746,6 @@ object TextAnalysis {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0,1], got $threshold")
     val tPpm = math.floor(threshold * 1000000).toLong
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     // largest per-term weight for which a topM-term sum of squares (or
     // of cross products — |wa·wb| ≤ safeW² likewise) provably fits
     // int64: the long-vs-decimal branch point for the exact folds below
@@ -788,10 +785,10 @@ object TextAnalysis {
         array_max(transform(col("__arr"), e => e.getField("w"))))
       .withColumn("__n2",
         when(col("__wmax") <= safeW,
-          aggregate(col("__arr"), lit(0L),
-            (a, e) => a + e.getField("w") * e.getField("w")).cast(dec))
-          .otherwise(aggregate(col("__arr"), lit(0L).cast(dec),
-            (a, e) => a + e.getField("w").cast(dec) * e.getField("w"))))
+          dec(aggregate(col("__arr"), lit(0L),
+            (a, e) => a + e.getField("w") * e.getField("w"))))
+          .otherwise(aggregate(col("__arr"), dec(lit(0L)),
+            (a, e) => a + dec(e.getField("w")) * e.getField("w"))))
       .filter(col("__n2") > 0)
       .localCheckpoint()
     // residual-norm prefix: cumulative squares via a per-doc window
@@ -873,12 +870,12 @@ object TextAnalysis {
       // safeW ⇒ every cross product and the topM-sum fit int64
       .withColumn("dp",
         when(col("__wma") <= safeW && col("__wmb") <= safeW,
-          aggregate(col("__aa"), lit(0L),
+          dec(aggregate(col("__aa"), lit(0L),
             (a, e) => a + e.getField("w") *
               coalesce(element_at(col("__mb"), e.getField("token")),
-                lit(0L))).cast(dec))
-          .otherwise(aggregate(col("__aa"), lit(0L).cast(dec),
-            (a, e) => a + e.getField("w").cast(dec) *
+                lit(0L)))))
+          .otherwise(aggregate(col("__aa"), dec(lit(0L)),
+            (a, e) => a + dec(e.getField("w")) *
               coalesce(element_at(col("__mb"), e.getField("token")),
                 lit(0L)))))
       .withColumn("cosine", col("dp").cast("double") /
@@ -996,8 +993,6 @@ object TextAnalysis {
     * corpus-sized reaches the driver. */
   def bigramLmScores(df: DataFrame, idCol: String, textCol: String)
       : DataFrame = {
-    def lfp(c: Column): Column =
-      floor(log(c.cast("double")) * lit(1000000L)).cast("long")
     val toks = df.filter(col(textCol).isNotNull)
       .select(col(idCol).as("__id"), tokens(col(textCol)).as("__toks"))
     val bi = toks.filter(size(col("__toks")) >= 2)
@@ -1065,8 +1060,6 @@ object TextAnalysis {
     * it safe inside a foreachBatch. */
   def bigramLmScoresAgainstModel(df: DataFrame, idCol: String,
       textCol: String, model: DataFrame): DataFrame = {
-    def lfp(c: Column): Column =
-      floor(log(c.cast("double")) * lit(1000000L)).cast("long")
     val toks = df.filter(col(textCol).isNotNull)
       .select(col(idCol).as("__id"), tokens(col(textCol)).as("__toks"))
     val bi = toks.filter(size(col("__toks")) >= 2)
@@ -1121,8 +1114,6 @@ object TextAnalysis {
   def importanceWeights(raw: DataFrame, target: DataFrame, idCol: String,
       textCol: String, buckets: Int = 4096): DataFrame = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
-    def lfp(c: Column): Column =
-      floor(log(c.cast("double")) * lit(1000000L)).cast("long")
     val rawFeats = raw.filter(col(textCol).isNotNull)
       .select(col(idCol).as("__id"),
         explode(polyShingleHashes(col(textCol), 2)).as("__h"))
@@ -1303,9 +1294,7 @@ object TextAnalysis {
       // exact floor division (q110's subtract-the-remainder pattern):
       // a bare double division could round across an integer boundary
       .select(col("token"), col("cnt"),
-        ((col("cnt") * lit(1000000L) -
-          pmod(col("cnt") * lit(1000000L), col("__total"))) / col("__total"))
-          .cast("long").as("freq_ppm"))
+        fdiv(col("cnt") * lit(1000000L), col("__total")).as("freq_ppm"))
       .orderBy(col("cnt").desc, col("token"))
   }
 
@@ -1346,8 +1335,6 @@ object TextAnalysis {
   def collocations(df: DataFrame, textCol: String, minCount: Long,
       topK: Int): DataFrame = {
     require(minCount >= 1 && topK > 0, s"bad args: $minCount, $topK")
-    def lfp(c: Column): Column =
-      floor(log(c.cast("double")) * lit(1000000L)).cast("long")
     val toksD = df.filter(col(textCol).isNotNull)
       .select(tokens(col(textCol)).as("__toks"))
       .filter(size(col("__toks")) >= 2)
@@ -1403,7 +1390,7 @@ object TextAnalysis {
         val num = (col("__rk") - 1L) * lit(1000000L)
         val den = greatest(col("__n") - 1L, lit(1L))
         when(col("__n") === 1L, lit(1000000L))
-          .otherwise(((num - pmod(num, den)) / den).cast("long"))
+          .otherwise(fdiv(num, den))
           .as("pct_ppm")
       })
   }
@@ -1456,8 +1443,6 @@ object TextAnalysis {
     * path. */
   private[text] def charEntropySqlShape(df: DataFrame, idCol: String,
       textCol: String): DataFrame = {
-    def lfp(c: Column): Column =
-      floor(log(c.cast("double")) * lit(1000000L)).cast("long")
     df.filter(col(textCol).isNotNull && length(col(textCol)) > 0)
       .select(col(idCol),
         explode(regexp_extract_all(col(textCol), lit("[\\s\\S]"), lit(0)))
@@ -1469,8 +1454,7 @@ object TextAnalysis {
         sum(col("__c") * lfp(col("__c"))).as("__wsum"))
       .select(col(idCol), col("__n").as("n_chars_counted"), {
         val cross = lfp(col("__n")) * col("__n") - col("__wsum")
-        ((cross - pmod(cross, col("__n"))) / col("__n")).cast("long")
-          .as("entropy_fp")
+        fdiv(cross, col("__n")).as("entropy_fp")
       })
   }
 
@@ -1496,7 +1480,6 @@ object TextAnalysis {
     val w = Window.orderBy(col("__x"), col(sourceCol))
     // DECIMAL(38,0) throughout the fold: total_tokens·10⁶ passes 2^63
     // at ~10¹³ corpus tokens (exactly the 100-TB regime)
-    def dec(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(38, 0))
     bySource.withColumn("__i", row_number().over(w).cast("long"))
       .agg(count(lit(1)).as("n_sources"),
         sum("__x").as("total_tokens"),
@@ -1506,7 +1489,7 @@ object TextAnalysis {
           dec(col("n_sources") + 1L) * dec(col("total_tokens"))) *
           dec(lit(1000000L))
         val den = dec(col("n_sources")) * dec(col("total_tokens"))
-        ((num - pmod(num, den)) / den).cast("long").as("gini_ppm")
+        fdiv(num, den).as("gini_ppm")
       })
   }
 
@@ -1536,10 +1519,7 @@ object TextAnalysis {
       broadcast(df.agg(sum(cnt).as(tot)))
     val ca = sideCounts(a, "__ca")
     val cb = sideCounts(b, "__cb")
-    def ppm(c: Column, n: Column): Column = {
-      val x = c * lit(1000000L)
-      ((x - pmod(x, n)) / n).cast("long")
-    }
+    def ppm(c: Column, n: Column): Column = fdiv(c * lit(1000000L), n)
     ca.join(cb, Seq("token"), "full_outer")
       .na.fill(0L, Seq("__ca", "__cb"))
       .filter(col("__ca") + col("__cb") >= minCount)
@@ -1589,11 +1569,6 @@ object TextAnalysis {
   def zipfSlope(df: DataFrame, idCol: String, textCol: String,
       topK: Int = 1000): DataFrame = {
     require(topK >= 2, s"topK must be >= 2, got $topK")
-    def lfp(c: Column): Column =
-      floor(log(c.cast("double")) * lit(1000000L)).cast("long")
-    def dec(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(38, 0))
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
     val head = df.filter(col(textCol).isNotNull)
       .select(explode(tokens(col(textCol))).as("__tok"))
       .filter(col("__tok") =!= "")
@@ -1632,9 +1607,6 @@ object TextAnalysis {
   def ngramDiversity(df: DataFrame, srcCol: String, textCol: String,
       n: Int = 3): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
-    def dec(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(38, 0))
     val grams = df.filter(col(textCol).isNotNull)
       .select(col(srcCol).as("source"), tokens(col(textCol)).as("__a"))
       // docs shorter than n tokens contribute nothing — and the filter
@@ -1678,11 +1650,6 @@ object TextAnalysis {
     * explicit broadcasts. */
   def sourceKlDivergence(df: DataFrame, srcCol: String,
       textCol: String): DataFrame = {
-    def lfp(c: Column): Column =
-      floor(log(c.cast("double")) * lit(1000000L)).cast("long")
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
-    def dec(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(38, 0))
     val st = df.filter(col(textCol).isNotNull)
       .select(col(srcCol).as("source"), explode(tokens(col(textCol))).as("__t"))
       .filter(col("__t") =!= "")
@@ -1717,8 +1684,6 @@ object TextAnalysis {
     * ratio is one exact integer division. No `count(distinct)`
     * anywhere. */
   def hapaxRatio(df: DataFrame, srcCol: String, textCol: String): DataFrame = {
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
     df.filter(col(textCol).isNotNull)
       .select(col(srcCol).as("source"), explode(tokens(col(textCol))).as("__t"))
       .filter(col("__t") =!= "")
@@ -1750,9 +1715,6 @@ object TextAnalysis {
   def ngramHeadCoverage(df: DataFrame, textCol: String, n: Int = 3,
       k: Int = 1000): DataFrame = {
     require(n >= 1 && k >= 1, s"need n >= 1 and k >= 1, got $n, $k")
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
-    def dec(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(38, 0))
     val counts = df.filter(col(textCol).isNotNull)
       .select(tokens(col(textCol)).as("__a"))
       .filter(size(col("__a")) >= n)
@@ -1793,8 +1755,6 @@ object TextAnalysis {
   def duplicationTrend(df: DataFrame, idCol: String, textCol: String,
       buckets: Int = 10): DataFrame = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
     val hashed = df.filter(col(textCol).isNotNull)
       .select(col(idCol).as("__id"), md5(col(textCol)).as("__h"))
       .localCheckpoint() // first-id rollup + the flag join read it
@@ -1897,9 +1857,6 @@ object TextAnalysis {
   def sourceVocabularyOverlap(df: DataFrame, srcCol: String,
       textCol: String, minCount: Long = 1L): DataFrame = {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
-    def dec(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(38, 0))
     val st = df.filter(col(textCol).isNotNull)
       .select(col(srcCol).as("__s"), explode(tokens(col(textCol))).as("__t"))
       .filter(col("__t") =!= "")
@@ -1937,9 +1894,6 @@ object TextAnalysis {
     * partials carry count + length); the report is sources-bounded. */
   def dedupSavings(df: DataFrame, srcCol: String,
       textCol: String): DataFrame = {
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
-    def dec(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(38, 0))
     df.filter(col(textCol).isNotNull)
       .select(col(srcCol).as("source"), md5(col(textCol)).as("__h"),
         length(col(textCol)).cast("long").as("__len"))
@@ -1976,9 +1930,6 @@ object TextAnalysis {
   def qualityBudgetCurve(df: DataFrame, idCol: String, textCol: String,
       stopwords: Seq[String], buckets: Int = 10): DataFrame = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
-    def dec(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(38, 0))
     val scored = df.filter(col(textCol).isNotNull)
       .select(col(idCol).as("__id"),
         qualityScoreE6(col(textCol), stopwords).as("__q"),
@@ -2031,9 +1982,6 @@ object TextAnalysis {
       k: Int = 10, minCount: Long = 5L): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
-    def dec(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(38, 0))
     val st = df.filter(col(textCol).isNotNull)
       .select(col(srcCol).as("source"), explode(tokens(col(textCol)))
         .as("__t"))
@@ -2077,8 +2025,6 @@ object TextAnalysis {
     * fold — nothing else. */
   def languageEntropy(df: DataFrame, srcCol: String,
       langCol: String): DataFrame = {
-    def lfp(c: Column): Column =
-      floor(log(c.cast("double")) * lit(1000000L)).cast("long")
     df.filter(col(langCol).isNotNull)
       .groupBy(col(srcCol).as("source"), col(langCol).as("__l"))
       .agg(count(lit(1)).as("__c"))
@@ -2087,8 +2033,7 @@ object TextAnalysis {
         sum(col("__c") * lfp(col("__c"))).as("__wsum"))
       .select(col("source"), col("n_docs"), col("n_langs"), {
         val cross = lfp(col("n_docs")) * col("n_docs") - col("__wsum")
-        ((cross - pmod(cross, col("n_docs"))) / col("n_docs")).cast("long")
-          .as("lang_entropy_micro_nats")
+        fdiv(cross, col("n_docs")).as("lang_entropy_micro_nats")
       })
       .orderBy("source")
   }
@@ -2112,9 +2057,6 @@ object TextAnalysis {
     * but the narrow per-doc count triple. */
   def readabilityCensus(df: DataFrame, srcCol: String,
       textCol: String): DataFrame = {
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
-    def dec(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(38, 0))
     val perDoc = df.filter(col(textCol).isNotNull)
       .select(col(srcCol).as("source"),
         filter(tokens(col(textCol)), t => t =!= "").as("__a"),
@@ -2159,9 +2101,6 @@ object TextAnalysis {
     require(n >= 1, s"n must be >= 1, got $n")
     require(flagPpm >= 0 && flagPpm <= 1000000L,
       s"flagPpm must be in [0, 1000000], got $flagPpm")
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
-    def dec(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(38, 0))
     val grams = df.filter(col(textCol).isNotNull)
       .select(col(srcCol).as("source"), col(idCol).as("__id"),
         tokens(col(textCol)).as("__a"))

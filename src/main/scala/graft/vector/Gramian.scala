@@ -2,7 +2,8 @@ package graft.vector
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+
+import graft.functions.Exact.{dec, fdiv}
 
 /** Distributed Gram matrix of an embedding column — Gᵢⱼ = Σ_vecs xᵢ·xⱼ,
   * the input to PCA / whitening / covariance-shrinkage steps an
@@ -112,7 +113,7 @@ object Gramian {
     }
     partials.toDF("dim_i", "dim_j", "__p")
       .groupBy("dim_i", "dim_j")
-      .agg(sum(col("__p").cast(DecimalType(38, 0))).cast("long").as("gram_fp"))
+      .agg(sum(dec(col("__p"))).cast("long").as("gram_fp"))
       .withColumn("gram", col("gram_fp").cast("double") / lit(1.0e12))
   }
 
@@ -144,10 +145,10 @@ object Gramian {
           col("gram_fp")))
     val num = mirrored.join(vDf, col("__jj") === col("__dim"))
       .groupBy("dim")
-      .agg(sum(col("gram_fp").cast(DecimalType(38, 0)) * col("__v")).as("__s"))
-    val den = lit("1000000000000").cast(DecimalType(38, 0))
+      .agg(sum(dec(col("gram_fp")) * col("__v")).as("__s"))
+    val den = dec(lit("1000000000000"))
     num.select(col("dim"),
-        ((col("__s") - pmod(col("__s"), den)) / den).cast("long").as("v_fp"))
+        fdiv(col("__s"), den).as("v_fp"))
       .orderBy("dim")
   }
 
@@ -174,7 +175,7 @@ object Gramian {
         // widen BEFORE multiplying: a long×long product wraps silently
         // at |xfp·yfp| >= 2^63 (a label of ~9e6 with unit-scale
         // embeddings); DECIMAL(38,0)×long never does
-        (col("col").cast(DecimalType(38, 0)) * col("__yf")).as("__p"))
+        (dec(col("col")) * col("__yf")).as("__p"))
       .groupBy("dim")
       .agg(sum(col("__p")).cast("long").as("xty_fp"))
       .withColumn("xty", col("xty_fp").cast("double") / lit(1.0e12))
@@ -200,8 +201,7 @@ object Gramian {
       .groupBy("dim")
       .agg(count(lit(1)).as("n"),
         sum("__xf").as("sum_fp"),
-        sum(col("__xf").cast(DecimalType(38, 0)) * col("__xf"))
-          .cast(DecimalType(38, 0)).as("sumsq_fp"))
+        dec(sum(dec(col("__xf")) * col("__xf"))).as("sumsq_fp"))
       .orderBy("dim")
   }
 
@@ -244,18 +244,17 @@ object Gramian {
   def projectFp(df: DataFrame, idCol: String, embCol: String,
       vFp: Seq[Long]): DataFrame = {
     require(vFp.nonEmpty, "vFp must be non-empty")
-    val vArr = array(vFp.map(v => lit(v).cast(DecimalType(38, 0))): _*)
+    val vArr = array(vFp.map(v => dec(lit(v))): _*)
     val xf = transform(col(embCol),
-      x => floor(x.cast("double") * lit(1000000L)).cast("long")
-        .cast(DecimalType(38, 0)))
+      x => dec(floor(x.cast("double") * lit(1000000L)).cast("long")))
     val dot = aggregate(
       zip_with(xf, vArr, (a, b) => a * b),
-      lit(0).cast(DecimalType(38, 0)),
+      dec(lit(0)),
       (acc, y) => acc + y)
-    val m = lit(1000000L).cast(DecimalType(38, 0))
+    val m = dec(lit(1000000L))
     df.filter(col(embCol).isNotNull && size(col(embCol)) === vFp.length)
       .select(col(idCol),
-        ((dot - pmod(dot, m)) / m).cast("long").as("proj_fp"))
+        fdiv(dot, m).as("proj_fp"))
   }
 
   /** Driver-side closed-form ridge solve over collected [[gramianFp]] /

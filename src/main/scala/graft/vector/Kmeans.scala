@@ -3,6 +3,8 @@ package graft.vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact.{dec, fdiv}
+
 /** Distributed Lloyd k-means over an embedding column — the full-data
   * clustering [[Ivf.buildIndex]]'s sample-bounded fit deliberately
   * avoids. Use the sampled fit to seed, and this to refine on the whole
@@ -39,15 +41,14 @@ object Kmeans {
       .select(col("cell"), (col("__pos") + 1).cast("long").as("dim"),
         floor(col("__x") * lit(1000000L)).cast("long").as("__xfp"))
       .groupBy("cell", "dim")
-      .agg(sum("__xfp").cast("decimal(38,0)").as("__sx"),
-        count(lit(1)).cast("decimal(38,0)").as("__n"))
+      .agg(dec(sum("__xfp")).as("__sx"),
+        dec(count(lit(1))).as("__n"))
       // floor division in DECIMAL(38,0): long `/` would cast to double,
       // exact only while |__sx| < 2^53 (~9e9 members per cell at unit
       // components) — decimal keeps the mean exact at ANY cell size,
       // same pattern as Retrieval's BM25 fixed-point scoring
       .select(col("cell"), col("dim"),
-        ((col("__sx") - pmod(col("__sx"), col("__n"))) / col("__n"))
-          .cast("long").as("centroid_fp"))
+        fdiv(col("__sx"), col("__n")).as("centroid_fp"))
       .withColumn("centroid", col("centroid_fp").cast("double") / lit(1000000.0))
 
   /** Cell-pruned kNN graph: every vector's top-`k` nearest neighbors

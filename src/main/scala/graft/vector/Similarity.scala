@@ -3,6 +3,8 @@ package graft.vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact._
+
 /** Similarity search over an embedding column (`array<float>`).
   *
   * Two paths, matching the usual build-out of an ANN system:
@@ -72,8 +74,6 @@ object Similarity {
       docs: DataFrame, docIdCol: String, srcCol: String,
       sampleMod: Long = 4L): DataFrame = {
     require(sampleMod >= 1, s"sampleMod must be >= 1, got $sampleMod")
-    def fdiv(num: Column, den: Column) =
-      ((num - pmod(num, den)) / den).cast("long")
     val sampled = emb.filter(pmod(col(idCol), lit(sampleMod)) === 0L)
       .join(docs.select(col(docIdCol).as("__did"),
         col(srcCol).as("__src")), col(idCol) === col("__did"))
@@ -87,9 +87,7 @@ object Similarity {
           .cast(org.apache.spark.sql.types.DecimalType(18, 6)).as("__c"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_pairs"),
-        fdiv((sum(col("__c")) * 1000000)
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0)),
-          count(lit(1)).cast(org.apache.spark.sql.types.DecimalType(38, 0)))
+        fdiv(dec(sum(col("__c")) * 1000000), dec(count(lit(1))))
           .as("mean_cos_micro"))
       .orderBy("source")
   }

@@ -724,9 +724,11 @@ class CdcPipelineSpec extends SparkSpec {
       .collect().toSet
 
   /** Spark jobs started by `body` on any thread that carries the caller's
-    * job tag. A marker job run afterwards, and seen by the listener, shows
-    * that the bus has delivered every earlier job. */
-  private def jobsTagged(body: => Unit): Int = {
+    * job tag; each is also handed to `onJob`. A marker job run afterwards,
+    * and seen by the listener, shows that the bus has delivered every
+    * earlier job. */
+  private def jobsTagged(body: => Unit,
+      onJob: org.apache.spark.scheduler.SparkListenerJobStart => Unit = _ => ()): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val tag = s"cdc-jobs-${java.util.UUID.randomUUID()}"
@@ -735,7 +737,9 @@ class CdcPipelineSpec extends SparkSpec {
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
-        if (prop("spark.job.tags").exists(_.split(",").contains(tag))) jobs.incrementAndGet()
+        if (prop("spark.job.tags").exists(_.split(",").contains(tag))) {
+          jobs.incrementAndGet(); onJob(e)
+        }
         if (prop("graft.test.marker").contains(tag)) markerSeen = true
       }
     }
@@ -776,6 +780,32 @@ class CdcPipelineSpec extends SparkSpec {
       // them now, so both layouts run the same 12.
       assert(jobs == 12, s"buckets=$buckets: jobs of a two-table merge")
     }
+  }
+
+  test("each write of a CDC batch names its Spark jobs: the probe, _late and each " +
+      "table's merge are told apart, and the caller's call site is restored") {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val wh = tmpDir(); val cp = tmpDir()
+    val pipeline = new CdcPipeline(spark, wh, cp, twoTableKeys,
+      watermarkDelay = "1 second", warehouseBuckets = 4)
+    pipeline.mergeMicroBatch(twoTableBase, 0L)
+    Files.writeString(java.nio.file.Paths.get(s"$cp/_hwm"), "5000000")
+    val jobSites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val stageNames = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    sc.setCallSite("spec caller")
+    try {
+      val jobs = jobsTagged(pipeline.mergeMicroBatch(twoTableBatch, 1L), e => {
+        // the result stage is named after the job's call site
+        jobSites.add(e.stageInfos.maxBy(_.stageId).name)
+        e.stageInfos.foreach(si => stageNames.add(si.name))
+      })
+      assert(jobs == 12)
+      assert(sc.getLocalProperty("callSite.short") == "spec caller")
+    } finally sc.clearCallSite()
+    val named = Set("probe", "_late", "merge t0", "merge t1").map(w => s"cdc batch 1: $w")
+    assert(jobSites.asScala.toSet == named, jobSites.asScala.toSeq)
+    assert(stageNames.asScala.filter(_.startsWith("cdc batch 1: ")).toSet == named)
   }
 
   test("one table's merge failing every attempt: its sibling has merged, _hwm " +

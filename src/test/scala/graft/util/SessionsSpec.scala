@@ -87,4 +87,9 @@ class SessionsSpec extends AnyFunSuite {
     assert(filesMatching("src/main/scala", captured) == Set("CdcPipeline.scala"))
     assert(filesMatching("src/main/scala", pools) == Set("CdcPipeline.scala"))
   }
+
+  test("structure: Exact is the one home of the exact-arithmetic helpers") {
+    val helper = """def (dec|fdiv|fdivDec|exactDiv|floorDiv|ceilDiv|dayNum|lfp)\b""".r
+    assert(filesMatching("src/main/scala", helper) == Set("Exact.scala"))
+  }
 }
