@@ -23,12 +23,34 @@ import graft.registry.Registry
   *
   * `sfDir` defaults to `SPARK_GRAFT_SF_DIR`, else sf0.1; `outDir` to
   * `plans/r19`. Storage is swept after each plan.
+  *
+  * Both modes write the [[explain]] form, free of JVM counters and
+  * identities: two runs of one commit write identical files.
   */
 object Plans {
 
-  private def explain(spark: SparkSession, name: String, sfDir: String): String =
-    try SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode)
-    finally SparkEntry.sweepTransientStorage(spark)
+  /** Ids that JVM-wide counters hand out: expressions (`#n`), exchanges
+    * (`plan_id=n`), lambda variables (`lambda x_n`) and checkpointed RDDs
+    * (`RDD[n]`). Group 1 is the kept prefix. */
+  private val counters = Seq("(#)\\d+", "(plan_id=)\\d+", "(lambda [A-Za-z]+_)\\d+",
+    "(RDD\\[)\\d+").map(_.r)
+  private val stripped = Seq("\\$Lambda\\$[0-9]+/0x[0-9a-f]+@[0-9a-f]+".r -> "\\$Lambda",
+    "\\.scala:[0-9]+".r -> ".scala")
+
+  /** The formatted physical plan, each counter's ids renumbered from 0 in
+    * order of first appearance (equal ids stay equal), and lambda
+    * identities and call-site line numbers stripped. */
+  private[graft] def explain(spark: SparkSession, name: String, sfDir: String): String = {
+    val raw =
+      try SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode)
+      finally SparkEntry.sweepTransientStorage(spark)
+    val renumbered = counters.foldLeft(raw) { (s, re) =>
+      val seen = scala.collection.mutable.HashMap.empty[String, Int]
+      re.replaceAllIn(s, m => java.util.regex.Matcher.quoteReplacement(
+        m.group(1) + seen.getOrElseUpdate(m.matched, seen.size)))
+    }
+    stripped.foldLeft(renumbered) { case (s, (re, to)) => re.replaceAllIn(s, to) }
+  }
 
   private def queryNumber(name: String): Int =
     name.drop(1).takeWhile(_.isDigit).toInt

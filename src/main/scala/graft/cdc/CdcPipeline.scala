@@ -42,42 +42,38 @@ import scala.util.control.NonFatal
   * overwrite one directory per batch id, so at-least-once redelivery of
   * a batch converges to the same snapshot.
   *
-  * The warehouse here is parquet-snapshot-per-table (local testbed). On a
-  * cluster the identical collapse+merge plan targets Delta/Iceberg
-  * `MERGE INTO`; only `writeTable` changes.
+  * Each warehouse table is a copy-on-write [[graft.util.BucketedTable]]:
+  * a merge rewrites only the buckets its keys hash into. On a cluster the
+  * identical collapse+merge plan targets Delta/Iceberg `MERGE INTO`.
+  * Events carry their order in `commit_timestamp` and their delete marker
+  * in `__deleted`; every non-key data column is a partial update (ST7).
   */
 final class CdcPipeline(
     spark: SparkSession,
     warehouseDir: String,
     checkpointDir: String,
     keysByTable: Map[String, Seq[String]],
-    ordCol: String = "commit_timestamp",
-    deleteCol: String = "__deleted",
     watermarkDelay: String = "24 hours",
-    partialUpdate: Boolean = true,
     /** ST5: merge retry attempts with exponential backoff (reference
       * sink retry config postgres-sink.json:12-13,33-34). */
     maxMergeRetries: Int = 3,
     retryBaseBackoffMs: Long = 100,
-    /** > 0 switches the warehouse to bucket-partitioned COPY-ON-WRITE
-      * tables ([[graft.util.BucketedTable]]): each merge rewrites only
-      * the buckets its keys hash into instead of the whole table — the
-      * at-scale layout. 0 keeps the single-snapshot path (simplest for
-      * small tables). */
-    warehouseBuckets: Int = 0) {
+    /** Buckets per warehouse table, fixed at its creation: a merge
+      * rewrites the buckets its keys hash into, so 1 rewrites the whole
+      * table (sizing: docs/SCALE_RUNBOOK.md). */
+    warehouseBuckets: Int = 1) {
+  require(warehouseBuckets >= 1, s"warehouseBuckets must be >= 1, got $warehouseBuckets")
+
+  private val ordCol = "commit_timestamp"
+  private val deleteCol = "__deleted"
 
   def tablePath(table: String): String = s"$warehouseDir/$table"
 
-  /** Reads recover from a crash mid-swap (see AtomicSnapshot): the
-    * snapshot is never lost, at most the in-flight batch is — and the
-    * checkpoint replays that batch into an idempotent merge. */
+  /** The table's rows; None when it was never written or every row was
+    * deleted. A read rolls back a swap a crash interrupted, so at most the
+    * in-flight batch is lost, and the checkpoint replays it. */
   def readTable(table: String): Option[DataFrame] =
-    if (warehouseBuckets > 0)
-      graft.util.BucketedTable.read(spark, tablePath(table))
-    else graft.util.AtomicSnapshot.read(spark, tablePath(table))
-
-  private def writeTable(table: String, df: DataFrame): Unit =
-    graft.util.AtomicSnapshot.write(df, tablePath(table))
+    graft.util.BucketedTable.read(spark, tablePath(table))
 
   /** ST11 backpressure analog of `max.queue.size`: bound files per
     * micro-batch. Convenience reader for JSON-line envelope streams. */
@@ -236,8 +232,8 @@ final class CdcPipeline(
     * One aggregate job over the batch yields its max commit ts, its
     * late-row count and every (table, bucket) pair its current rows
     * touch, the bucket taken with each table's own [[graft.util.BucketedTable.bucketCol]]
-    * (NULL on the snapshot layout, and for a table whose key columns
-    * the batch lacks: its merge then fails on them). The batch's
+    * (NULL for a table whose key columns the batch lacks: its merge
+    * then fails on them). The batch's
     * independent writes, the `_late` quarantine and one merge per
     * table, then run concurrently ([[runConcurrently]]); `_hwm`
     * advances only after every one of them succeeded. */
@@ -252,15 +248,12 @@ final class CdcPipeline(
       case None => col(ordCol).isNull
     }
     val isLate = coalesce(lateCond, lit(true))
-    val noBucket = lit(null).cast("int")
-    val bucket =
-      if (warehouseBuckets == 0) noBucket
-      else keysByTable.foldLeft(noBucket) { case (other, (table, keys)) =>
-        if (keys.forall(batch.columns.contains))
-          when(col("__table") === table,
-            graft.util.BucketedTable.bucketCol(keys, warehouseBuckets)).otherwise(other)
-        else other
-      }
+    val bucket = keysByTable.foldLeft(lit(null).cast("int")) { case (other, (table, keys)) =>
+      if (keys.forall(batch.columns.contains))
+        when(col("__table") === table,
+          graft.util.BucketedTable.bucketCol(keys, warehouseBuckets)).otherwise(other)
+      else other
+    }
     val probe = named(batchId, "probe")(batch.agg(
       max(col(ordCol)),
       count(when(isLate, 1)),
@@ -303,29 +296,13 @@ final class CdcPipeline(
     try body finally keys.zip(saved).foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
 
-  /** Merge one table's current rows; `touched` is the set of buckets their
-    * keys hash into (unused on the snapshot layout). */
+  /** Merge one table's current rows, rewriting only `touched`, the
+    * buckets their keys hash into; every data column is a partial update. */
   private def mergeTable(table: String, keys: Seq[String], updates: DataFrame,
-      touched: Seq[Int]): Unit = {
-    val partialCols =
-      if (partialUpdate) updates.columns.filterNot(c => keys.contains(c) ||
-        c == ordCol || c == deleteCol).toSeq
-      else Seq.empty
-    if (warehouseBuckets > 0)
-      // COW path: rewrites only the buckets this batch's keys touch
-      graft.util.BucketedTable.merge(spark, tablePath(table), updates,
-        keys, ordCol, deleteCol, partialCols, warehouseBuckets, touched)
-    else {
-      val merged = readTable(table) match {
-        case Some(target) =>
-          Upsert.mergeBatch(target, updates, keys, ordCol, deleteCol, partialCols)
-        case None =>
-          Upsert.collapseBatch(updates, keys, col(ordCol), deleteCol, partialCols)
-            .drop(deleteCol)
-      }
-      writeTable(table, merged)
-    }
-  }
+      touched: Seq[Int]): Unit =
+    graft.util.BucketedTable.merge(spark, tablePath(table), updates, keys, ordCol,
+      deleteCol, updates.columns.filterNot(c => keys.contains(c) || c == ordCol ||
+        c == deleteCol).toSeq, warehouseBuckets, touched)
 
   /** Runs a batch's independent writes at once, on a pool of one thread
     * per write that lives for this call. Each write goes through

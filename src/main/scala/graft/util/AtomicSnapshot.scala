@@ -1,47 +1,50 @@
 package graft.util
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Crash-safe snapshot-directory swap, shared by the warehouse writer and
-  * the DLQ replay ledger.
+/** Crash-safe directory swap, shared by [[BucketedTable]]'s full rewrite
+  * and the DLQ replay ledger.
   *
-  * POSIX cannot atomically swap directories, so the dest→old, staging→dest
-  * dance has a crash window with dest absent. The invariant here is that
-  * data always survives in EITHER `dest` or `dest__old`, and `read`
-  * RECOVERS: if dest is missing but old exists, old is moved back before
-  * reading. A crash can lose at most the in-flight batch (which the
-  * stream replays from its checkpoint — merges are idempotent), never the
-  * accumulated snapshot.
+  * POSIX cannot atomically swap directories, so the dest→backup,
+  * staging→dest dance has a crash window with dest absent. The invariant
+  * here is that data always survives in EITHER dest or its backup, and
+  * [[rollback]], which readers run first, moves a surviving backup back.
+  * A crash can lose at most the in-flight write (which the stream replays
+  * from its checkpoint — merges are idempotent), never the snapshot.
   */
 object AtomicSnapshot {
 
-  private def oldPath(dest: String) = s"${dest}__old"
-  private def stagingPath(dest: String) = s"${dest}__staging"
-
-  private def deleteRecursive(p: Path): Unit = Fs.deleteRecursive(p)
-
-  /** Write `df` as the new snapshot at `dest` (overwrite semantics). */
-  def write(df: DataFrame, dest: String): Unit = {
-    val staging = stagingPath(dest)
-    df.write.mode("overwrite").parquet(staging)
+  /** Move the finished `staging` into place at `dest`, keeping any current
+    * `dest` at `backup` until the new one has landed. */
+  def swap(staging: String, dest: String, backup: String): Unit = {
     val destP = Paths.get(dest)
-    val oldP = Paths.get(oldPath(dest))
+    val backupP = Paths.get(backup)
     if (Files.exists(destP)) {
-      deleteRecursive(oldP)
-      Files.move(destP, oldP)
+      Fs.deleteRecursive(backupP)
+      Files.move(destP, backupP)
       Files.move(Paths.get(staging), destP)
-      deleteRecursive(oldP)
+      Fs.deleteRecursive(backupP)
     } else Files.move(Paths.get(staging), destP)
   }
 
-  /** Read the snapshot, recovering from a crash mid-swap: a missing dest
-    * with a surviving `__old` is rolled back before reading. */
+  /** Undo a [[swap]] that crashed between its moves: a surviving `backup`
+    * is moved back if `dest` is missing, else deleted. Idempotent. */
+  def rollback(dest: String, backup: String): Unit =
+    if (Files.exists(Paths.get(backup))) {
+      if (!Files.exists(Paths.get(dest))) Files.move(Paths.get(backup), Paths.get(dest))
+      else Fs.deleteRecursive(Paths.get(backup))
+    }
+
+  /** Write `df` as the new snapshot at `dest` (overwrite semantics). */
+  def write(df: DataFrame, dest: String): Unit = {
+    df.write.mode("overwrite").parquet(s"${dest}__staging")
+    swap(s"${dest}__staging", dest, s"${dest}__old")
+  }
+
+  /** Read the snapshot, after rolling back a crashed swap. */
   def read(spark: SparkSession, dest: String): Option[DataFrame] = {
-    val destP = Paths.get(dest)
-    val oldP = Paths.get(oldPath(dest))
-    if (!Files.exists(destP) && Files.exists(oldP))
-      Files.move(oldP, destP) // crash between the two moves: roll back
-    if (Files.exists(destP)) Some(spark.read.parquet(dest)) else None
+    rollback(dest, s"${dest}__old")
+    if (Files.exists(Paths.get(dest))) Some(spark.read.parquet(dest)) else None
   }
 }

@@ -7,8 +7,10 @@ import org.apache.spark.sql.functions._
 
 import graft.cdc.Upsert
 
-/** Bucket-partitioned COPY-ON-WRITE warehouse table — the scale answer
-  * to the snapshot path's full-table rewrite per micro-batch.
+/** Bucket-partitioned COPY-ON-WRITE warehouse table — the one layout
+  * of the CDC warehouse ([[graft.cdc.CdcPipeline]]). With n = 1 every
+  * merge reads and rewrites the whole table; a larger n bounds the
+  * rewrite to the buckets a batch's keys touch.
   *
   * Layout: `dest/__bucket=<i>/part-*.parquet`, bucket =
   * pmod(xxhash64(keys), n), plus a `_graft_buckets` metadata file
@@ -69,16 +71,25 @@ object BucketedTable {
   private def lockFor(dest: String): Object =
     locks.computeIfAbsent(dest, _ => new Object)
 
-  /** True when dest holds actual bucket data (an emptied table keeps its
-    * directory + metadata but has no bucket dirs — reading it through
+  /** True when dest exists and holds bucket data (an emptied table keeps
+    * its directory + metadata but has no bucket dirs — reading it through
     * spark.read would throw). */
   private def hasBuckets(dest: String): Boolean =
     Fs.listDir(Paths.get(dest)).exists(_.getFileName.toString.startsWith("__bucket="))
+
+  /** A directory without `_graft_buckets` (such as an older CDC warehouse's
+    * plain parquet table) is refused, not read as empty or merged into. */
+  private def requireBucketed(dest: String): Unit =
+    if (Files.exists(Paths.get(dest)) && !Files.exists(metaFile(dest)))
+      throw new IllegalStateException(
+        s"$dest exists but is not a bucketed table (no _graft_buckets) — " +
+          "a plain parquet table; rewrite it with writeFull first")
 
   /** Metadata pins the WHOLE layout — bucket count AND key columns: a
     * rewrite or merge hashed by different keys would scatter rows into
     * buckets later merges never look in (silent key duplication). */
   private def checkLayout(dest: String, keys: Seq[String], n: Int): Unit = {
+    requireBucketed(dest)
     val mf = metaFile(dest)
     if (Files.exists(mf)) {
       val lines = new String(Files.readAllBytes(mf), "UTF-8").trim.split("\n")
@@ -92,36 +103,23 @@ object BucketedTable {
           s"table at $dest is bucketed by [${lines(1)}]; " +
             s"refusing to operate with keys [${keys.mkString(",")}]")
       }
-    } else if (Files.exists(Paths.get(dest)))
-      throw new IllegalStateException(
-        s"$dest exists but is not a bucketed table (no _graft_buckets) — " +
-          "it was written by the snapshot path; migrate with writeFull first")
+    }
   }
 
-  /** Roll back any swap that crashed between moves: per-bucket backups
-    * first, then a full-rewrite backup. Idempotent. Callers hold the
-    * dest lock. */
+  /** Roll back any swap that crashed between moves
+    * ([[AtomicSnapshot.rollback]]): per-bucket backups first, then a
+    * full-rewrite backup. Idempotent. Callers hold the dest lock. */
   private def recoverLocked(dest: String): Unit = {
     val or = Paths.get(oldRoot(dest))
-    if (Files.exists(or)) {
-      Fs.listDir(or).foreach { backup =>
-        val destDir = Paths.get(dest, backup.getFileName.toString)
-        if (!Files.exists(destDir)) Files.move(backup, destDir)
-        else Fs.deleteRecursive(backup)
-      }
-      Fs.deleteRecursive(or)
-    }
-    val of = Paths.get(oldFull(dest))
-    if (Files.exists(of)) {
-      // full-rewrite backup survives only if the new dest never landed
-      if (!Files.exists(Paths.get(dest))) Files.move(of, Paths.get(dest))
-      else Fs.deleteRecursive(of)
-    }
+    Fs.listDir(or).foreach(backup => AtomicSnapshot.rollback(
+      Paths.get(dest, backup.getFileName.toString).toString, backup.toString))
+    Fs.deleteRecursive(or)
+    AtomicSnapshot.rollback(dest, oldFull(dest))
   }
 
   /** Full (re)write — initial load or compaction. Keeps the existing
-    * table as a backup until the new layout is in place (the
-    * [[AtomicSnapshot]] dance on the whole partitioned directory). */
+    * table as a backup until the new layout is in place
+    * ([[AtomicSnapshot.swap]] of the whole partitioned directory). */
   def writeFull(df: DataFrame, dest: String, keys: Seq[String], n: Int,
       repartitionByBucket: Boolean = false): Unit =
     lockFor(dest).synchronized {
@@ -138,14 +136,7 @@ object BucketedTable {
       arranged.write.partitionBy("__bucket").mode("overwrite").parquet(staging)
       Files.write(metaFile(staging),
         s"$n\n${keys.mkString(",")}".getBytes("UTF-8"))
-      val destP = Paths.get(dest)
-      val oldP = Paths.get(oldFull(dest))
-      if (Files.exists(destP)) {
-        Fs.deleteRecursive(oldP)
-        Files.move(destP, oldP)
-        Files.move(Paths.get(staging), destP)
-        Fs.deleteRecursive(oldP)
-      } else Files.move(Paths.get(staging), destP)
+      AtomicSnapshot.swap(staging, dest, oldFull(dest))
     }
 
   /** None when the table doesn't exist OR holds zero rows (every bucket
@@ -153,7 +144,8 @@ object BucketedTable {
   def read(spark: SparkSession, dest: String): Option[DataFrame] =
     lockFor(dest).synchronized {
       recoverLocked(dest)
-      if (Files.exists(Paths.get(dest)) && hasBuckets(dest))
+      requireBucketed(dest)
+      if (hasBuckets(dest))
         Some(spark.read.parquet(dest).drop("__bucket"))
       else None
     }
@@ -169,7 +161,7 @@ object BucketedTable {
       n: Int, keyValues: Map[String, Any]): Option[DataFrame] =
     lockFor(dest).synchronized {
       recoverLocked(dest)
-      if (!Files.exists(Paths.get(dest)) || !hasBuckets(dest)) None
+      if (!hasBuckets(dest)) None
       else {
         checkLayout(dest, keys, n)
         val b = spark.range(1)
@@ -199,9 +191,9 @@ object BucketedTable {
         writeFull(df, dest, keys, n, repartitionByBucket = true))
     }
 
-  /** COW merge of one collapsed update batch (same contract as the
-    * snapshot path: `updates` carries key cols, `ordCol`, `deleteCol`,
-    * data cols). `touched` must hold every bucket `updates`' keys hash
+  /** COW merge of one update batch: `updates` carries key cols, `ordCol`,
+    * `deleteCol` and data cols, and [[Upsert.mergeBatch]] collapses it to
+    * the latest row per key and applies it. `touched` must hold every bucket `updates`' keys hash
     * into ([[touchedBuckets]]); a staging write that lands a bucket
     * outside it fails the merge before any swap. */
   def merge(spark: SparkSession, dest: String, updates: DataFrame,
@@ -210,7 +202,7 @@ object BucketedTable {
     lockFor(dest).synchronized {
       recoverLocked(dest)
       checkLayout(dest, keys, n)
-      if (!Files.exists(Paths.get(dest)) || !hasBuckets(dest)) {
+      if (!hasBuckets(dest)) {
         writeFull(
           Upsert.collapseBatch(updates, keys, col(ordCol), deleteCol,
             partialUpdateCols).drop(deleteCol),

@@ -12,6 +12,17 @@ class PlanSpec extends SparkSpec {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString()
 
+  test("Plans.explain: two explains of one query in one session are byte-identical") {
+    // each holds expression and exchange ids; q109 also lambda identities and
+    // lambda variables, q65 the RDDs of the checkpoints its explain runs
+    for (name <- Seq("q1_pricing_summary", "q109_gramian", "q65_dedup_keep_best")) {
+      val first = Plans.explain(spark, name, sf)
+      assert(Plans.explain(spark, name, sf) == first, name)
+      assert(first.contains("#0") && first.contains("plan_id=0"), s"$name:\n$first")
+      assert(!"""\$Lambda\$\d|\.scala:\d""".r.findFirstIn(first).isDefined, s"$name:\n$first")
+    }
+  }
+
   test("q6 top-orders: column pruning reaches the parquet scan") {
     val p = plan("q6_top_orders")
     assert(p.contains("ReadSchema: struct<o_orderkey:bigint,o_totalprice:double>"),

@@ -152,6 +152,49 @@ class BucketedTableSpec extends SparkSpec {
     assert(e3.getMessage.contains("bucketed by [id]"))
   }
 
+  test("read refuses a plain parquet directory instead of reading it as empty") {
+    val snap = tmp()
+    initial.write.parquet(snap)
+    val e = intercept[IllegalStateException](BucketedTable.read(spark, snap))
+    assert(e.getMessage.contains("not a bucketed table"), e.getMessage)
+    // an absent table is still just absent
+    assert(BucketedTable.read(spark, tmp()).isEmpty)
+  }
+
+  test("one bucket: the merge equals Upsert.mergeBatch over the whole table, " +
+      "and a table emptied by deletes reads as None") {
+    val dest = tmp()
+    BucketedTable.writeFull(initial, dest, Seq("id"), 1)
+    val updates = Seq(
+      (5L, Some("updated"), None: Option[Double], 200L, "false"), // partial
+      (6L, None: Option[String], None: Option[Double], 200L, "true"),
+      (7L, Some("stale"), Some(0.0), 50L, "false"),              // older: kept
+      (900L, Some("new"), Some(9.0), 200L, "false")
+    ).toDF("id", "name", "value", "seq", "__deleted")
+    val touched = BucketedTable.touchedBuckets(updates, Seq("id"), 1)
+    assert(touched == Seq(0))
+    BucketedTable.merge(spark, dest, updates, Seq("id"), "seq", "__deleted",
+      Seq("name", "value"), 1, touched)
+    val expected = Upsert.mergeBatch(initial, updates, Seq("id"), "seq",
+      "__deleted", Seq("name", "value"))
+      .select("id", "name", "value", "seq").as[(Long, String, Double, Long)]
+      .collect().toSet
+    val got = BucketedTable.read(spark, dest).get
+      .select("id", "name", "value", "seq").as[(Long, String, Double, Long)]
+      .collect().toSet
+    assert(got == expected)
+    assert(got.contains((5L, "updated", 5.0, 200L)) && got.contains((7L, "name7", 7.0, 100L)))
+    // delete every remaining key: the one bucket directory goes, and the
+    // table reads as no state
+    val deleteAll = got.toSeq.map { case (id, _, _, _) =>
+      (id, None: Option[String], None: Option[Double], 300L, "true") }
+      .toDF("id", "name", "value", "seq", "__deleted")
+    BucketedTable.merge(spark, dest, deleteAll, Seq("id"), "seq", "__deleted",
+      Seq("name", "value"), 1, Seq(0))
+    assert(!Files.exists(Paths.get(dest, "__bucket=0")))
+    assert(BucketedTable.read(spark, dest).isEmpty)
+  }
+
   test("recover rolls back a bucket whose swap crashed between moves") {
     val dest = tmp()
     BucketedTable.writeFull(initial, dest, Seq("id"), N)

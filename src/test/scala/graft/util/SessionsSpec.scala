@@ -88,6 +88,11 @@ class SessionsSpec extends AnyFunSuite {
     assert(filesMatching("src/main/scala", pools) == Set("CdcPipeline.scala"))
   }
 
+  test("structure: the CDC warehouse is merged only through BucketedTable") {
+    val otherLayout = """AtomicSnapshot|Upsert\.mergeBatch""".r
+    assert(filesMatching("src/main/scala/graft/cdc", otherLayout).isEmpty)
+  }
+
   test("structure: Exact is the one home of the exact-arithmetic helpers") {
     val helper = """def (dec|fdiv|fdivDec|exactDiv|floorDiv|ceilDiv|dayNum|lfp)\b""".r
     assert(filesMatching("src/main/scala", helper) == Set("Exact.scala"))
